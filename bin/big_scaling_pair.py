@@ -87,7 +87,7 @@ def main() -> None:
                   file=sys.stderr)
             continue
         print(f"leg {i}: local[{cores}] ...", file=sys.stderr)
-        r = run_at(cores, clips_path, ckpt_base, None, "join", args.rows, "window")
+        r = run_at(cores, clips_path, ckpt_base, None, args.rows)
         r["order"] = i
         legs.append(r)
         _write(out_path, args, legs)

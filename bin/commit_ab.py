@@ -36,7 +36,7 @@ def run_leg(repo: str, cores: int, clips_path: str, ckpt_base: str,
             sp: int | None, n_rows: int) -> dict:
     code = scaling_bench.CHILD.format(
         repo=repo, cores=cores, clips_path=clips_path, ckpt_base=ckpt_base,
-        sp=sp, pair_gen="join", n_rows=n_rows, sizing="window",
+        sp=sp, n_rows=n_rows,
     )
     s0, t0 = scaling_bench._cpu_jiffies()
     out = subprocess.run(

@@ -95,7 +95,7 @@ def main() -> None:
             open(marker, "w").write("ok")
             print(f"generated in {time.time() - t0:.0f}s", file=sys.stderr)
         print(f"leg: n={n} local[{args.cores}] ...", file=sys.stderr)
-        r = run_at(args.cores, clips_path, ckpt_base, None, "join", n, "window")
+        r = run_at(args.cores, clips_path, ckpt_base, None, n)
         r["corpus_rows"] = n
         legs.append(r)
         _write(out_path, args, legs)

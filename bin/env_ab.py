@@ -70,8 +70,7 @@ def main() -> None:
             os.environ.pop(args.var, None)
         print(f"leg {i}: {args.var}={val or '<unset>'} local[{args.cores}] ...",
               file=sys.stderr)
-        r = run_at(args.cores, clips_path, ckpt_base, args.sp, "join",
-                   args.rows, "window")
+        r = run_at(args.cores, clips_path, ckpt_base, args.sp, args.rows)
         r["value"] = val or "<unset>"
         r["order"] = i
         legs.append(r)

@@ -66,7 +66,7 @@ def main() -> None:
             continue
         os.environ["SPARK_GRAFT_MINHASH_SCHEME"] = scheme
         print(f"leg {i}: scheme={scheme} local[{args.cores}] ...", file=sys.stderr)
-        r = run_at(args.cores, clips_path, ckpt_base, None, "join", args.rows, "window")
+        r = run_at(args.cores, clips_path, ckpt_base, None, args.rows)
         r["scheme"] = scheme
         r["order"] = i
         legs.append(r)

@@ -33,8 +33,6 @@ def main() -> None:
     ap.add_argument("--sp", type=int, default=128)
     ap.add_argument("--legs", default="32,8,16,4,2,32")
     ap.add_argument("--tag", default="win")
-    ap.add_argument("--sizing", default="window", choices=["window", "join"])
-    ap.add_argument("--pair-gen", default="join", choices=["agg", "join"])
     args = ap.parse_args()
 
     # tmpfs everywhere, same storage model as scaling_bench --shm
@@ -63,8 +61,7 @@ def main() -> None:
             print(f"leg {i} local[{cores}] already recorded, skipping", file=sys.stderr)
             continue
         print(f"leg {i}: local[{cores}] ...", file=sys.stderr)
-        r = run_at(cores, clips_path, ckpt_base, args.sp, args.pair_gen,
-                   args.rows, args.sizing)
+        r = run_at(cores, clips_path, ckpt_base, args.sp, args.rows)
         r["order"] = i
         legs.append(r)
         _write(out_path, args, legs)
@@ -93,8 +90,6 @@ def _write(out_path: str, args, legs: list) -> None:
                 "rows": args.rows,
                 "storage": "tmpfs",
                 "sp": args.sp,
-                "sizing": args.sizing,
-                "pair_gen": args.pair_gen,
                 "legs": legs,
                 "pairs": pairs,
                 "target": 0.8,

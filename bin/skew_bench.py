@@ -50,7 +50,7 @@ clips = spark.read.parquet({corpus!r})
 ckpt = tempfile.mkdtemp(prefix="skew-ckpt-", dir={ckpt_base!r})
 try:
     t0 = time.time()
-    pipe = DedupPipeline(spark, ckpt, EngineConfig(partitions={sp}, collect_stats=True))
+    pipe = DedupPipeline(spark, ckpt, EngineConfig(partitions={sp}))
     clusters = pipe.run(clips)
     n_clusters = clusters.select("cluster_id").distinct().count()
     wall = time.time() - t0
@@ -60,7 +60,7 @@ try:
         d = json.load(open(m))
         walls[_os.path.basename(_os.path.dirname(m))] = round(d.get("wall_sec", 0.0), 1)
     metrics = [m for m in pipe.store.metrics()
-               if m["metric"] in ("band_stats", "lsh_hot_band_groups",
+               if m["metric"] in ("lsh_hot_band_groups",
                                    "lsh_hot_band_rows_starred",
                                    "ungated_pairs_dropped",
                                    "candidate_pairs_rows")]

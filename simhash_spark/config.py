@@ -65,6 +65,11 @@ VERIFY_JACCARD_MIN = 0.8
 SUBSTR_MIN_LEN = 64
 GRAM_K = 16
 GRAM_STRIDE = 8
+#: LSH-evidence gate of the substring tier: a candidate pair is checked
+#: for containment only if it shares >= MIN_GRAM_HITS sampled grams (a
+#: 64-char span samples ~6 grams; P(< 2) ~ 1.1%) or is a starred
+#: hot-band edge with any gram hit (operators/lsh.needs_substring).
+MIN_GRAM_HITS = 2
 
 #: Minhash signature scheme.
 #:   "perm128"       — NUM_PERM independent (a*x+b) mod p permutations:
@@ -89,52 +94,6 @@ GRAM_STRIDE = 8
 import os as _os
 
 MINHASH_SCHEME = _os.environ.get("SPARK_GRAFT_MINHASH_SCHEME", "oph-densified")
-
-#: Bands-stage kernel SHAPE (values bit-identical either way — an
-#: EXECUTION knob, not semantics; pytest-pinned parity):
-#:   "arrow"  — mapInArrow emits pre-exploded (id, bkey) rows straight
-#:              from the kernel's flat (values, counts) output: no
-#:              pandas Series-of-lists, no Arrow LargeList assembly, no
-#:              JVM explode (VERDICT r4 #5).
-#:   "pandas" — ArrayType pandas UDF + JVM explode (the r4 shape).
-#: Env-selectable for subprocess A/B legs like MINHASH_SCHEME.
-BANDS_KERNEL = _os.environ.get("SPARK_GRAFT_BANDS_KERNEL", "arrow")
-
-#: Storage level for candidate_pairs' persisted annotated-band table —
-#: an EXECUTION knob (pair multiset identical across modes, pytest-
-#: pinned), env-selectable for subprocess A/B legs like MINHASH_SCHEME:
-#:   'memdisk' — MEMORY_AND_DISK_DESER (DataFrame.persist() default);
-#:   'ser'     — MEMORY_AND_DISK serialized (smaller heap footprint);
-#:   'disk'    — DISK_ONLY (no unified-memory tug-of-war between the
-#:               cache and the pair-dedupe agg's execution memory — the
-#:               isolated cp-stage diagnosis of the T8 high mode);
-#:   'none'    — no persist (the bkey Exchange is still reused across
-#:               the cold/hot branches; only the window pass recomputes).
-ANNOT_STORAGE = _os.environ.get("SPARK_GRAFT_ANNOT_STORAGE", "memdisk")
-
-#: Verify-stage texts prefilter: 'full' (default) joins the whole
-#: profile texts table into both pair branches; 'semi' first left-semi-
-#: joins texts down to the ids the gated survivor set actually touches,
-#: so at 10^12 rows the full corpus text never enters the verify
-#: shuffles — only the candidates'. Default is 'full' because the
-#: interleaved A/B at 2M/T8/tmpfs (BENCH/ab-verify-textfilter-t8-
-#: n2000000.json) measured semi ~17% SLOWER on the verify stage even
-#: with the survivor frame persisted: at bench scale the extra
-#: distinct + semi pass over texts costs more than the 4 text shuffles
-#: it shrinks. The crossover favors 'semi' when texts stop fitting the
-#: shuffle tier (corpus >> candidates), so it stays env-selectable for
-#: cluster runs. EXECUTION knob — the verified output is identical by
-#: construction (every surviving pair's ids are in the filter set;
-#: pytest-pinned semi==full).
-VERIFY_TEXT_FILTER = _os.environ.get("SPARK_GRAFT_VERIFY_TEXT_FILTER", "full")
-
-#: Row-id encoding of the hot pipeline interior (bands/candidate_pairs
-#: and verify's joins): 'cid' (default — int64 xxhash64(clip_id),
-#: mapped back to clip_id strings at verify's output) or 'clip_id'
-#: (legacy string keys end-to-end). Env-selectable so interleaved
-#: same-session A/B legs can replay the string engine; SEMANTICS pins
-#: the choice, so checkpoints refuse to resume across a switch.
-ID_KEY = _os.environ.get("SPARK_GRAFT_ID_KEY", "cid")
 
 #: Prime modulus for minhash universal hashing (Mersenne 2^31-1: products of
 #: two <2^31 values fit in uint64 — vectorizes without 128-bit arithmetic).
@@ -200,21 +159,6 @@ class EngineConfig:
     #: granularity; diverted groups are logged to _metrics (no silent
     #: truncation). None disables the pair-count cap.
     max_pairs_per_group: int | None = None
-    #: Cold-path pairwise expansion in candidate_pairs: 'join'
-    #: (sort-merge self-join on bkey) or 'agg' (one aggregation pass +
-    #: double explode). A 2x2 interleaved pipeline A/B at 32 cores is a
-    #: tie inside host noise and 'join' wins at 8 cores
-    #: (BENCH/pipeline-ab-pairgen-t32-n2000000.json, cp-stage-*.json).
-    pair_gen: str = "join"
-    #: How candidate_pairs learns each band group's size/hub: 'window'
-    #: (count/min OVER (PARTITION BY bkey) — one sorted pass, no join;
-    #: default) or 'join' (groupBy sizes + SMJ back onto the band table).
-    #: Interleaved fresh-JVM A/B at 2M rows / sp=128
-    #: (BENCH/cp-stage-n2000000-winab-sp128.json): window 237/212 s vs
-    #: join 714/363 s at 8 cores (2.4x, and the join mode's bimodal high
-    #: tail disappears); 328/212 vs 353/247 s at 32. Identical pair
-    #: multisets pytest-pinned.
-    sizing: str = "window"
     #: Connected-components max iterations (safety guard; the loop stops on
     #: convergence well before this for realistic dup-cluster diameters).
     cc_max_iters: int = 50
@@ -224,9 +168,6 @@ class EngineConfig:
     cc_checkpoint_every: int = 5
     #: Arrow batch size for pandas UDFs.
     arrow_batch: int = 10_000
-    #: Log per-detector band statistics (row counts + approx distinct
-    #: band hashes) to _metrics after the bands stage.
-    collect_stats: bool = True
     #: Which detectors to run.
     detectors: tuple = ("simhash", "minhash", "substring")
 
@@ -267,6 +208,6 @@ SEMANTICS = {
     # cid = xxhash64(clip_id) int64, mapped back to clip_id strings at
     # the verified_pairs boundary. Checkpoints written under the string-
     # keyed interior refuse to resume (profile lacks cid, pairs carry
-    # strings). Tracks the ID_KEY env knob (A/B replays).
-    "id_key": "cid-xxhash64" if ID_KEY == "cid" else "legacy-string",
+    # strings).
+    "id_key": "cid-xxhash64",
 }

@@ -29,50 +29,34 @@ Scale design (the part that must survive 10^12 rows):
 - Pair generation is an equi self-join on bkey —
   sort-merge under AQE with skew-join splitting enabled.
 - A single pathological band key still yields O(n^2) pairs no matter how
-  AQE splits partitions, so band GROUPS are sized first with a cheap
-  map-side-combinable groupBy().count(); groups over ``band_group_cap``
-  are diverted: the ``exact`` detector always emits linear STAR edges
-  (hub = min clip_id — identical text is transitively duplicate, so no
-  pairwise loss), and hot sim/mh/gram groups emit star edges too
-  (approximation, counts logged to _metrics — no silent truncation).
-- Pair dedupe also counts per-detector band hits (mh_hits/gram_hits) and
-  flags star edges — verify uses these as free LSH-evidence gates so the
-  Python tier only sees pairs that can plausibly pass.
+  AQE splits partitions, so every band row first learns its group's size
+  and hub as window aggregates (count/min OVER PARTITION BY bkey — one
+  sorted pass over the bkey-partitioned table, no join); groups over
+  ``band_group_cap`` are diverted: the ``exact`` detector always emits
+  linear STAR edges (hub = min id — identical text is transitively
+  duplicate, so no pairwise loss), and hot sim/mh/gram groups emit star
+  edges too (approximation, counts logged to _metrics — no silent
+  truncation).
+- Pair dedupe (``dedupe_pairs``, shared with the incremental ingest)
+  also counts per-detector band hits (mh_hits/gram_hits) and flags star
+  edges — verify uses these as free LSH-evidence gates
+  (``needs_jaccard`` / ``needs_substring``) so the Python tier only sees
+  pairs that can plausibly pass.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from simhash_spark import config as C
 from simhash_spark.functions.signatures import (
-    mh_gram_bkeys_udf,
+    mh_gram_bkeys_exploded,
     minhash_bands_udf,
     simhash_table_key_cols,
     substring_grams_udf,
 )
-from simhash_spark.util import track_persisted
-
-
-def _persist_annotated(df: DataFrame) -> tuple[DataFrame, list]:
-    """Persist the annotated band table per config.ANNOT_STORAGE.
-
-    Returns (df, handles-to-release). 'none' skips the persist entirely —
-    correctness is unaffected (the bkey Exchange is reused across the
-    cold/hot consumer branches; only the sizing pass recomputes)."""
-    mode = C.ANNOT_STORAGE
-    if mode == "none":
-        return df, []
-    from pyspark import StorageLevel
-
-    lvl = {
-        "memdisk": StorageLevel.MEMORY_AND_DISK_DESER,
-        "ser": StorageLevel.MEMORY_AND_DISK,
-        "disk": StorageLevel.DISK_ONLY,
-    }[mode]
-    df = df.persist(lvl)
-    return df, [df]
+from simhash_spark.util import defer_metric, track_persisted
 
 
 #: detector names in det_id order (bkey bits 62..63); the order IS the
@@ -97,8 +81,64 @@ def det_id_col(bkey) -> "F.Column":
     return F.shiftrightunsigned(bkey, 62).cast("int")
 
 
-def det_name_col(bkey) -> "F.Column":
-    return F.element_at(F.array(*[F.lit(d) for d in DETS]), det_id_col(bkey) + 1)
+def det_name_col(det_id) -> "F.Column":
+    """0-based det id -> detector name (``DETS`` order)."""
+    return F.element_at(F.array(*[F.lit(d) for d in DETS]), det_id + 1)
+
+
+def det_id_of_name(det) -> "F.Column":
+    """Detector name -> 0-based det id (inverse of ``det_name_col``)."""
+    return F.array_position(F.array(*[F.lit(d) for d in DETS]), det) - 1
+
+
+def needs_jaccard() -> "F.Column":
+    """Tier-2 jaccard gate on deduped pairs: >= 2 shared minhash bands (a
+    true j >= 0.8 pair hits >= 2 of the 32 bands w.p. 1-3e-5), or any mh
+    hit on a starred hot-band edge."""
+    return (F.col("mh_hits") >= 2) | ((F.col("starred") == 1) & (F.col("mh_hits") >= 1))
+
+
+def needs_substring() -> "F.Column":
+    """Tier-2 substring gate on deduped pairs: >= config.MIN_GRAM_HITS
+    shared sampled grams, or any gram hit on a starred hot-band edge."""
+    return (F.col("gram_hits") >= C.MIN_GRAM_HITS) | (
+        (F.col("starred") == 1) & (F.col("gram_hits") >= 1)
+    )
+
+
+def can_verify() -> "F.Column":
+    """Pairs that can pass some verify tier: exact/sim pairs (tiers 0/1)
+    and mh/gram pairs with enough band-hit evidence for a tier-2 check.
+    Anything else fails every tier by construction — the hamming tier is
+    closed to it by the sim-table pigeonhole (operators/verify.py module
+    doc), and the tier-2 checks are exactly the two gates."""
+    return F.col("det").isin("exact", "sim") | needs_jaccard() | needs_substring()
+
+
+def dedupe_pairs(coll: DataFrame) -> DataFrame:
+    """Band collisions (a, b, det_id, starred) -> one row per (a, b).
+
+    One pair may surface from many bands/detectors: keep the detector
+    priority exact > sim > mh > gram (det_id order IS the priority),
+    COUNT the per-detector band hits the verify gates read (mh_hits,
+    gram_hits) and flag pairs with any star edge."""
+    return (
+        coll.groupBy("a", "b")
+        .agg(
+            F.min("det_id").alias("det_pr"),
+            F.sum(F.when(F.col("det_id") == 2, 1).otherwise(0)).alias("mh_hits"),
+            F.sum(F.when(F.col("det_id") == 3, 1).otherwise(0)).alias("gram_hits"),
+            F.max("starred").alias("starred"),
+        )
+        .select(
+            "a",
+            "b",
+            det_name_col(F.col("det_pr")).alias("det"),
+            "mh_hits",
+            "gram_hits",
+            "starred",
+        )
+    )
 
 
 def build_bands(
@@ -142,26 +182,14 @@ def build_bands(
     if "minhash" in detectors and "substring" in detectors:
         # FUSED kernel (VERDICT r3 #3): one Arrow crossing emits
         # PRE-PACKED bkeys for both detectors; the kernel shares a single
-        # flatten/prefix pass (reference.mh_gram_bkeys_batch) and the
+        # flatten/prefix pass (reference.mh_gram_bkeys_flat_batch) and the
         # packing layout is pytest-pinned against _pack_bkey.
-        # Default shape is mapInArrow emitting PRE-EXPLODED (id, bkey)
-        # rows straight from the kernel's flat output — no pandas
-        # Series-of-lists, no Arrow LargeList, no JVM explode (VERDICT
-        # r4 #5; values bit-identical, pytest-pinned; interleaved A/B at
-        # 2M/T8, BENCH/ab-bands-kernel-t8-n2000000.json: bands commit
-        # 31.5 -> 28.4 s, -10%, pipeline -1.6%, both legs consistent).
-        # The pandas-UDF + explode form stays env-selectable for A/B
-        # replays.
-        if C.BANDS_KERNEL == "arrow":
-            from simhash_spark.functions.signatures import mh_gram_bkeys_exploded
-
-            parts.append(mh_gram_bkeys_exploded(normalized, id_col=id_col))
-        else:
-            parts.append(
-                normalized.select(
-                    id_col, F.explode(mh_gram_bkeys_udf("norm_text")).alias("bkey")
-                )
-            )
+        # mapInArrow emits PRE-EXPLODED (id, bkey) rows straight from the
+        # kernel's flat output — no pandas Series-of-lists, no JVM explode
+        # (VERDICT r4 #5; interleaved A/B at 2M/T8,
+        # BENCH/ab-bands-kernel-t8-n2000000.json: bands commit 31.5 ->
+        # 28.4 s, -10%, against the pandas-UDF + explode form).
+        parts.append(mh_gram_bkeys_exploded(normalized, id_col=id_col))
     elif "minhash" in detectors:
         mh = normalized.select(
             id_col,
@@ -190,139 +218,62 @@ def candidate_pairs(
     max_pairs_per_group: int | None = None,
     metrics_sink=None,
     gate: bool = True,
-    gram_hits_min: int = 2,
-    pair_gen: str = "join",
-    sizing: str = "window",
-    stats: str = "auto",
 ) -> DataFrame:
-    """bands -> candidate_pairs(a, b, det) with a < b, deduplicated.
+    """bands -> candidate_pairs(a, b, det, mh_hits, gram_hits, starred)
+    with a < b, deduplicated.
 
     ``partitions`` sets the EXPLICIT hash-partitioning on the band keys
-    (north_rule: explicit partition counts): the sizing aggregation, the
-    annotate join and the self-join all reuse the one Exchange.
-    ``max_pairs_per_group`` caps the pairs a single band group may emit:
-    groups whose n*(n-1)/2 exceeds it are diverted to linear star edges
-    (same mechanism as ``band_group_cap``, expressed in pairs instead of
-    rows); diverted groups/pairs are logged to ``metrics_sink`` — no
-    silent truncation.
+    (north_rule: explicit partition counts): the window sizing and the
+    self-join both reuse the one Exchange. Each band row learns its
+    group's size and hub from count/min OVER (PARTITION BY bkey) — one
+    sorted pass, no join (interleaved A/B at 2M rows / sp=128,
+    BENCH/cp-stage-n2000000-winab-sp128.json: 2.4x faster at 8 cores
+    than a groupBy sizes table joined back). ``max_pairs_per_group``
+    caps the pairs a single band group may emit: groups whose
+    n*(n-1)/2 exceeds it are diverted to linear star edges (same
+    mechanism as ``band_group_cap``, expressed in pairs instead of
+    rows).
 
     ``gate=True`` (default) drops, AT THE SOURCE, deduped pairs that can
-    never verify: det mh/gram, unstarred, below BOTH evidence gates
-    (mh_hits < 2 and gram_hits < ``gram_hits_min``). Such a pair fails
-    every verify tier by construction — the hamming tier is closed to it
-    by the sim-table pigeonhole (operators/verify.py module doc), and
-    the jaccard/substring tiers are exactly the gates. At 2M rows this
-    is 65M of 77M deduped pairs (gram pairs with a single shared sampled
-    gram — overwhelmingly boilerplate coincidences): dropping them
-    shrinks the stage write and every verify-side scan ~6x. The drop
-    count is logged to ``metrics_sink``. verify_pairs re-applies the
-    same gates, so a sig-less caller that gates differently (pass
-    ``gate=False``) gets identical final semantics.
+    never verify (``can_verify``). At 2M rows this is 65M of 77M deduped
+    pairs (gram pairs with a single shared sampled gram — overwhelmingly
+    boilerplate coincidences): dropping them shrinks the stage write and
+    every verify-side scan ~6x. verify_pairs re-applies the same gates,
+    so an ungated caller (``gate=False``) gets identical final semantics.
 
-    ``pair_gen`` picks the cold-path pairwise expansion:
-      'join' (default) — sort-merge self-join on bkey.
-      'agg'  — groupBy(bkey) + sorted collect_set + a double explode
-             (posexplode of the id array, then explode of its tail
-             slice). ONE pass over the cold rows, no sort, no join; the
-             aggregation buffer is bounded by ``band_group_cap`` ids
-             (16 KB at the default 2000) because over-cap groups were
-             already diverted to star edges — the unbounded-group OOM
-             hazard that rules out a naive collect_list over raw bands
-             cannot occur here.
-    ``sizing`` picks how each band row learns its group's size and hub:
-      'window' (default) — count(*)/min(id) OVER (PARTITION BY
-             bkey): ONE sorted pass over the pre-partitioned band table
-             computes both annotations in place; no join, no second
-             sort, and the sizing aggregation is built only when a
-             metrics_sink actually needs the per-detector stats. Hot
-             groups buffer in WindowExec's external sorter (spills)
-             exactly like the SMJ sort buffer they replace. Interleaved
-             fresh-JVM A/B at 2M rows / sp=128
-             (BENCH/cp-stage-n2000000-winab-sp128.json): 237/212 s vs
-             join's 714/363 s at 8 cores — 2.4x, with the join mode's
-             bimodal high tail gone — and 328/212 vs 353/247 s at 32.
-      'join' — groupBy(bkey).count/min, then an equi-join of the sizes
-             back onto the band table. Both sides share the bkey
-             hash-partitioning, so the join adds NO exchange — but it
-             is a SortMergeJoin, i.e. a full sort of the engine's
-             biggest table plus a sort of the sizes, plus the separate
-             hash aggregation that produced them.
-    ``stats`` picks how metrics_sink's band accounting is computed
-    (r6 optimization — guide §1.2 "don't compute things you throw away"):
-      'deferred' — the hot-band star-diversion accounting
-             (lsh_hot_band_groups / lsh_hot_band_rows_starred — the
-             no-silent-truncation contract) rides the caller's
-             materialization pass for FREE via an Observation on the
-             star branch (each hot group emits grp_n-1 edges carrying
-             grp_n, so #groups = sum 1/(grp_n-1) and #rows = #groups +
-             #edges — exact integers after rounding). No separate job.
-             The per-detector band_stats table (rows/distinct hashes
-             per det) is NOT emitted in this mode: computing it needs
-             its own pass over the band table (measured ~1.2 s/run at
-             sf0.1, a full second pass at 2M rows).
-      'eager' — the legacy shape: a groupBy(bkey) aggregation over the
-             band table collected BEFORE pair generation, emitting the
-             full per-detector band_stats table plus the hot accounting.
-      'auto' — 'deferred' under 'window' sizing (the default pipeline
-             shape), 'eager' under 'join' sizing (where the sizes
-             aggregation is part of the plan anyway).
-    All modes emit the identical (a < b) pair multiset — pytest-pinned.
-    Measured at 2M rows (BENCH/cp-stage-n2000000.json,
-    BENCH/pipeline-ab-pairgen-t32-n2000000.json): at 8 cores 'join' wins
-    both isolated runs (233 s vs 272/312 s); at 32 cores a 2x2
-    interleaved pipeline-level A/B is a tie inside host noise (join
-    280/390 s vs agg 368/295 s total wall) — the one isolated run where
-    'agg' led 124 s to 223 s did not reproduce. 'join' stays the default;
-    'agg' remains the documented alternative for engines where the sort
-    is the measured bottleneck.
+    With a ``metrics_sink``, the hot-band star diversions
+    (lsh_hot_band_groups / lsh_hot_band_rows_starred — no silent
+    truncation) and the gate's drop count (ungated_pairs_dropped) ride
+    the caller's materialization pass as Observations: no extra job; the
+    values are flushed by CheckpointStore.write or
+    util.flush_deferred_metrics once the pairs are materialized.
     """
     spark = bands.sparkSession
     n_part = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     # row-id column: 'cid' (int64 interior key, the default bands layout)
-    # or 'clip_id' (legacy string bands) — whatever build_bands emitted.
+    # or 'clip_id' (string bands) — whatever build_bands emitted.
     rid = [c for c in bands.columns if c != "bkey"][0]
-    # EXPLICIT co-partitioning on the band keys: every downstream keyed op
-    # (sizing groupBy, annotate join, pairwise self-join) sees
-    # HashPartitioning(_KEYS, n_part) and reuses this single shuffle.
+    # EXPLICIT co-partitioning on the band keys: the window sizing and the
+    # pairwise self-join see HashPartitioning(_KEYS, n_part) and reuse
+    # this single shuffle.
     bands = bands.repartition(n_part, *_KEYS)
 
-    if stats == "auto":
-        stats = "deferred" if sizing == "window" else "eager"
-
-    # One partial-aggregable pass sizes every band group and picks its hub
-    # (map-side combine keeps hot keys linear — one row per key per mapper).
-    # Lazy: in 'window' sizing this is evaluated ONLY for the eager-stats
-    # block (the deferred default never computes it).
-    counts = bands.groupBy(*_KEYS).agg(
-        F.count("*").alias("grp_n"), F.min(rid).alias("hub")
-    )
-
-    if sizing == "window":
-        # grp_n/hub as window aggregates over the existing bkey hash-
-        # partitioning: ClusteredDistribution(bkey) is already satisfied,
-        # so the plan is Sort(bkey) + WindowExec — one sorted pass, no
-        # join. Groups of size 1 produce no pairs — dropped in place.
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*_KEYS)
-        annotated, _handles = _persist_annotated(
-            bands.select(
-                *_KEYS,
-                rid,
-                F.count(F.lit(1)).over(w).alias("grp_n"),
-                F.min(rid).over(w).alias("hub"),
-            ).filter(F.col("grp_n") >= 2)
+    # grp_n/hub as window aggregates over the existing bkey hash-
+    # partitioning: ClusteredDistribution(bkey) is already satisfied, so
+    # the plan is Sort(bkey) + WindowExec — one sorted pass, no join.
+    # Groups of size 1 produce no pairs — dropped in place. PERSIST: the
+    # cold self-join and the star branch both read it.
+    w = Window.partitionBy(*_KEYS)
+    annotated = (
+        bands.select(
+            *_KEYS,
+            rid,
+            F.count(F.lit(1)).over(w).alias("grp_n"),
+            F.min(rid).over(w).alias("hub"),
         )
-    else:
-        # Groups of size 1 produce no pairs — drop their rows before any
-        # join (the vast majority of band rows at realistic dup rates).
-        multi = counts.filter(F.col("grp_n") >= 2)
-        # Attach grp_n/hub: plain shuffle equi-join (NOT broadcast —
-        # `multi` can be billions of keys at 10^12 rows); AQE handles
-        # skew. PERSIST: three consumers (metrics agg, cold self-join x2
-        # branches, star filter) would otherwise re-run the join per
-        # branch.
-        annotated, _handles = _persist_annotated(bands.join(multi, _KEYS, "inner"))
+        .filter(F.col("grp_n") >= 2)
+        .persist()
+    )
 
     # a group is diverted to star edges if its ROW count exceeds
     # band_group_cap or its implied PAIR count n*(n-1)/2 exceeds
@@ -333,78 +284,24 @@ def candidate_pairs(
         over_cap = over_cap | (
             F.col("grp_n") * (F.col("grp_n") - 1) / 2 > max_pairs_per_group
         )
-
-    if metrics_sink is not None and stats == "eager":
-        # one pass over the per-key sizes yields band stats AND hot-band
-        # diagnostics (exact distinct-hash counts — no extra bands scan).
-        is_hot = over_cap & (det_id_col("bkey") != 0)
-        stat_rows = counts.withColumn("det", det_name_col("bkey")).groupBy("det").agg(
-            F.sum("grp_n").alias("rows"),
-            F.count("*").alias("distinct_hashes"),
-            F.sum(F.when(is_hot, 1).otherwise(0)).alias("hot_groups"),
-            F.sum(F.when(is_hot, F.col("grp_n")).otherwise(0)).alias("hot_rows"),
-        ).collect()
-        for r in stat_rows:
-            metrics_sink(
-                "band_stats",
-                int(r["rows"]),
-                det=r["det"],
-                distinct_hashes=int(r["distinct_hashes"]),
-                hot_groups=int(r["hot_groups"]),
-                hot_rows_starred=int(r["hot_rows"]),
-                cap=band_group_cap,
-            )
-        metrics_sink(
-            "lsh_hot_band_groups",
-            sum(int(r["hot_groups"]) for r in stat_rows),
-            cap=band_group_cap,
-        )
-        metrics_sink(
-            "lsh_hot_band_rows_starred",
-            sum(int(r["hot_rows"]) for r in stat_rows),
-            band_group_cap=band_group_cap,
-            max_pairs_per_group=max_pairs_per_group,
-        )
-
     is_star = over_cap | (det_id_col("bkey") == 0)
 
     # cold path: full pairwise within group (group size <= cap bounds the
     # worst group at cap^2/2 pairs). det travels as the 2-bit id packed
     # in bkey — no extra column.
     cold_bands = annotated.filter(~is_star).select(*_KEYS, rid)
-    if pair_gen == "agg":
-        # docstring 'agg' mode: one aggregation pass (no exchange — the
-        # rows are already hash-partitioned on bkey) + streamed double
-        # explode. sort_array makes ascending order a structural
-        # invariant, so pos < tail-slice position IS a < b; collect_set
-        # (vs _list) guards the degenerate same-clip-same-bkey row.
-        grp = cold_bands.groupBy(*_KEYS).agg(
-            F.sort_array(F.collect_set(rid)).alias("ids")
-        )
-        left = grp.select(
-            *_KEYS, "ids", F.posexplode("ids").alias("pos", "a")
-        )
-        pairs_cold = left.select(
-            F.col("a"),
-            F.explode(
-                F.slice("ids", F.col("pos") + 2, F.size("ids") - F.col("pos") - 1)
-            ).alias("b"),
+    a = cold_bands.alias("a")
+    b = cold_bands.alias("b")
+    pairs_cold = (
+        a.join(b, _KEYS, "inner")
+        .where(F.col(f"a.{rid}") < F.col(f"b.{rid}"))
+        .select(
+            F.col(f"a.{rid}").alias("a"),
+            F.col(f"b.{rid}").alias("b"),
             det_id_col("bkey").alias("det_id"),
             F.lit(0).alias("starred"),
         )
-    else:
-        a = cold_bands.alias("a")
-        b = cold_bands.alias("b")
-        pairs_cold = (
-            a.join(b, _KEYS, "inner")
-            .where(F.col(f"a.{rid}") < F.col(f"b.{rid}"))
-            .select(
-                F.col(f"a.{rid}").alias("a"),
-                F.col(f"b.{rid}").alias("b"),
-                det_id_col("bkey").alias("det_id"),
-                F.lit(0).alias("starred"),
-            )
-        )
+    )
 
     # star path (exact groups of any size + over-cap sim/mh/gram groups):
     # linear edges to the group's min id. For 'exact' this is lossless
@@ -412,16 +309,12 @@ def candidate_pairs(
     # logged approximation that avoids O(n^2).
     star_edges = annotated.filter(is_star).where(F.col(rid) != F.col("hub"))
     hot_obs = None
-    if metrics_sink is not None and stats == "deferred":
-        # free hot-band accounting (docstring 'deferred'): each over-cap
-        # group emits grp_n-1 star edges, every edge carrying grp_n, so
-        # #hot_groups = sum 1/(grp_n-1) and #hot_rows = #groups + #edges
-        # — observed on the single-consumer star branch (above the
-        # annotated cache, so cache-population races can't double-fire)
-        # and flushed by whoever materializes the pairs
-        # (CheckpointStore.write / util.flush_deferred_metrics).
-        from pyspark.sql import Observation
-
+    if metrics_sink is not None:
+        # hot-band accounting: each over-cap group emits grp_n-1 star
+        # edges, every edge carrying grp_n, so #hot_groups = sum
+        # 1/(grp_n-1) and #hot_rows = #groups + #edges — observed on the
+        # single-consumer star branch (above the annotated cache, so
+        # cache-population races can't double-fire).
         is_hot_row = det_id_col("bkey") != 0  # non-exact stars ARE over-cap
         hot_obs = Observation()
         star_edges = star_edges.observe(
@@ -438,67 +331,23 @@ def candidate_pairs(
         F.lit(1).alias("starred"),
     )
 
-    pairs = pairs_cold.unionByName(pairs_hot)
-    # one pair may surface from many bands/detectors — dedupe keeping
-    # exact > sim > mh > gram priority (det_id order IS the priority),
-    # and COUNT per-detector band hits: verify uses mh_hits as a free
-    # jaccard pre-filter (a true j>=0.8 pair hits >=2 of the 32 minhash
-    # bands w.p. 1-3e-5) and gram_hits to route substring checks.
-    pairs = (
-        pairs.groupBy("a", "b")
-        .agg(
-            F.min("det_id").alias("det_pr"),
-            F.sum(F.when(F.col("det_id") == 2, 1).otherwise(0)).alias("mh_hits"),
-            F.sum(F.when(F.col("det_id") == 3, 1).otherwise(0)).alias("gram_hits"),
-            F.max("starred").alias("starred"),
-        )
-        .select(
-            "a",
-            "b",
-            F.element_at(
-                F.array(*[F.lit(d) for d in DETS]), F.col("det_pr") + 1
-            ).alias("det"),
-            "mh_hits",
-            "gram_hits",
-            "starred",
-        )
-    )
+    pairs = dedupe_pairs(pairs_cold.unionByName(pairs_hot))
     if gate:
-        # source-side verifiability gate (docstring): keep exact/sim
-        # always (tier 0/1 candidates), and mh/gram pairs only with
-        # enough band-hit evidence for a tier-2 check.
-        can_verify = (
-            F.col("det").isin("exact", "sim")
-            | (F.col("mh_hits") >= 2)
-            | (F.col("gram_hits") >= gram_hits_min)
-            | ((F.col("starred") == 1) & ((F.col("mh_hits") >= 1) | (F.col("gram_hits") >= 1)))
-        )
+        verifiable = can_verify()
         if metrics_sink is not None:
-            # drop accounting rides the caller's materialization pass for
-            # free (Observation — no extra job, no cache): the count is
-            # DEFERRED until an action runs; CheckpointStore.write (or
-            # any direct consumer via util.flush_deferred_metrics)
-            # flushes it after the stage is materialized.
-            from pyspark.sql import Observation
-
-            from simhash_spark.util import defer_metric
-
             obs = Observation()
             pairs = pairs.observe(
-                obs, F.sum(F.when(~can_verify, 1).otherwise(0)).alias("dropped")
+                obs, F.sum(F.when(~verifiable, 1).otherwise(0)).alias("dropped")
             )
             pairs = defer_metric(
-                pairs.filter(can_verify),
+                pairs.filter(verifiable),
                 obs,
                 "dropped",
-                lambda v: metrics_sink(
-                    "ungated_pairs_dropped", int(v or 0), gram_hits_min=gram_hits_min
-                ),
+                lambda v: metrics_sink("ungated_pairs_dropped", int(v or 0)),
             )
         else:
-            pairs = pairs.filter(can_verify)
+            pairs = pairs.filter(verifiable)
     if hot_obs is not None:
-        from simhash_spark.util import defer_metric
 
         def _emit_hot(_v, obs=hot_obs):
             try:
@@ -523,4 +372,4 @@ def candidate_pairs(
     # `annotated` stays cached until the caller materializes `pairs`
     # (CheckpointStore.write releases it — no executor-storage leak in a
     # long-lived driver).
-    return track_persisted(pairs, _handles)
+    return track_persisted(pairs, [annotated])

@@ -26,7 +26,7 @@ its own pre-filtered DataFrame instead.
              jaccard   : mh_hits >= 2 (true j>=0.8 misses w.p. ~3e-5),
                          or any mh hit on a starred hot-band edge —
                          Arrow-batched shingle kernel (Python);
-             substring : gram_hits >= gram_hits_min (default 2 — a
+             substring : gram_hits >= config.MIN_GRAM_HITS (2 — a
                          64-char span samples ~6 grams; P(<2) ~ 1.1%),
                          or any gram hit on a starred edge — pure JVM
                          contains() (no Arrow crossing; this branch
@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from simhash_spark import config as C
 from simhash_spark.functions.signatures import hamming_col, jaccard_udf
+from simhash_spark.operators.lsh import needs_jaccard, needs_substring
 from simhash_spark.util import track_persisted
 
 _OUT_COLS = ["a", "b", "det", "method", "hamming", "jaccard"]
@@ -51,7 +52,6 @@ _OUT_COLS = ["a", "b", "det", "method", "hamming", "jaccard"]
 def verify_pairs(
     pairs: DataFrame,
     profile: DataFrame,
-    gram_hits_min: int = 2,
     metrics_sink=None,
 ) -> DataFrame:
     """pairs(a, b, det, mh_hits, gram_hits, starred) ->
@@ -111,12 +111,10 @@ def verify_pairs(
         F.lit(None).cast("double").alias("jaccard"),
     )
 
-    needs_jac = (F.col("mh_hits") >= 2) | (
-        (F.col("starred") == 1) & (F.col("mh_hits") >= 1)
-    )
-    needs_sub = (F.col("gram_hits") >= gram_hits_min) | (
-        (F.col("starred") == 1) & (F.col("gram_hits") >= 1)
-    )
+    # tier-2 routing: the same evidence gates candidate_pairs' source
+    # gate is built from (operators/lsh.py)
+    needs_jac = needs_jaccard()
+    needs_sub = needs_substring()
     attrs = ["a", "b", "det", "mh_hits", "gram_hits", "starred", "hamming"]
     rest = (
         simj.filter(F.col("hamming") > C.VERIFY_HAMMING_MAX)
@@ -128,13 +126,6 @@ def verify_pairs(
         )
         .filter(needs_jac | needs_sub)
     )
-    if C.VERIFY_TEXT_FILTER == "semi":
-        # The semi path reads `rest` three times (id set + both
-        # branches); unlike the old 7 GB joined-texts cache this frame
-        # is ids+evidence counts only (~40 B/row), so persisting it is
-        # cheap and saves two recomputations of the sim-fallthrough
-        # union + gate.
-        rest = rest.persist()
 
     # texts joined ONLY for the gated survivors, PER BRANCH and AFTER the
     # branch filter. The previous shape joined texts onto the combined
@@ -144,25 +135,6 @@ def verify_pairs(
     # branch (the bulk — gram evidence is the most common survivor) needs
     # no cache at all now that its check is JVM-side.
     texts = profile.select(key, "norm_text")
-    if C.VERIFY_TEXT_FILTER == "semi":
-        # Prefilter texts to the ids the gated survivors actually touch:
-        # the survivor id set is a small fraction of the corpus (dup
-        # candidates cluster), so the CORPUS-sized texts table never
-        # enters the four pair joins below — only the candidates' texts
-        # do. The id set is pair-symmetric and computed from `rest`
-        # itself, so every joined pair's ids are present by construction
-        # (output identical to the 'full' shape; pytest-pinned). The
-        # distinct shuffles 8-byte ids (O(survivor pairs)), the filtered
-        # table is persisted because both branches join it twice, and at
-        # runtime AQE sees its real (post-filter) size when picking the
-        # join strategy — at 10^12 rows this is the difference between
-        # shuffling the whole corpus' text and the candidates' sliver.
-        surv_ids = (
-            rest.select(F.col("a").alias(key))
-            .unionByName(rest.select(F.col("b").alias(key)))
-            .distinct()
-        )
-        texts = texts.join(surv_ids, key, "left_semi").persist()
 
     def with_texts(df: DataFrame) -> DataFrame:
         return df.join(
@@ -222,9 +194,8 @@ def verify_pairs(
         # groupBy that FAILS the job on any multi-clip cid instead of
         # silently corrupting output. Cost: one exchange of (8B cid,
         # clip_id) — ~0.5% of the pipeline's shuffle bytes at 8M rows —
-        # and the count/min aggregate is map-side-combined. Remediation
-        # is named in the error: SPARK_GRAFT_ID_KEY=string falls back to
-        # the collision-free string-keyed interior.
+        # and the count/min aggregate is map-side-combined. No fallback
+        # key exists yet: a collision-free row id is ROADMAP.md item D6.
         m = (
             profile.select("cid", "clip_id")
             .groupBy("cid")
@@ -243,9 +214,10 @@ def verify_pairs(
                             F.lit(" is carried by "),
                             F.col("_n").cast("string"),
                             F.lit(
-                                " clip_ids; rerun with "
-                                "SPARK_GRAFT_ID_KEY=string "
-                                "(collision-free string-keyed interior)"
+                                " clip_ids: distinct clip_ids hash to one "
+                                "64-bit xxhash64 row id. No fallback key "
+                                "exists; a collision-free row id is "
+                                "tracked as ROADMAP.md item D6"
                             ),
                         )
                     ).cast("string")
@@ -276,10 +248,6 @@ def verify_pairs(
     # making this a no-op there.
     n_part = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     out = out.coalesce(n_part)
-    # simj/jac (and the semi-filtered texts) stay cached until the
-    # caller materializes the result (CheckpointStore.write releases
-    # them).
-    cached = [simj, jac]
-    if C.VERIFY_TEXT_FILTER == "semi":
-        cached.extend([rest, texts])
-    return track_persisted(out, cached)
+    # simj/jac stay cached until the caller materializes the result
+    # (CheckpointStore.write releases them).
+    return track_persisted(out, [simj, jac])

@@ -15,9 +15,9 @@ vs the string-keyed engine (BENCH/ab-id-key-t8-n2000000.json, 2M rows,
 T8) measured candidate_pairs -20..42%%, verify -26%%, whole pipeline
 -12%% (profile/bands flat); verify maps back to clip_id strings at its
 output boundary, so the two user-facing tables (verified_pairs,
-clusters) keep string ids. The legacy string path stays selectable via
-SPARK_GRAFT_ID_KEY=clip_id (semantics-pinned; used by the A/B legs and
-by the string-keyed incremental state tables).
+clusters) keep string ids. Two clip_ids that share one 64-bit cid fail
+verify's map-back instead of corrupting output; there is no fallback
+key yet (a collision-free row id is ROADMAP.md item D6).
 
 ``profile`` fuses normalization and the simhash signature into ONE stage
 table: one Arrow pass over the corpus, and verify joins a single side
@@ -35,7 +35,6 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from simhash_spark import config as C
 from simhash_spark.config import EngineConfig
 from simhash_spark.functions.signatures import profile_udf
 from simhash_spark.operators.cc import assign_clusters, connected_components
@@ -76,7 +75,7 @@ class DedupPipeline:
         self.spark.conf.set(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(cfg.arrow_batch)
         )
-        sink = store.append_metric if cfg.collect_stats else None
+        sink = store.append_metric
 
         if not store.is_committed("profile"):
             # fused normalize+simhash UDF: ONE Arrow crossing per row
@@ -91,14 +90,11 @@ class DedupPipeline:
             # free. Collision odds are birthday(n, 2^64) — ~3e-8 at 1M
             # rows; at 10^12 rows a deployment should widen to a
             # 128-bit id (two-column key) — documented in COVERAGE.md.
-            id_cols = (
-                [F.xxhash64("clip_id").alias("cid")] if C.ID_KEY == "cid" else []
-            )
             profile = clips.select(
                 "clip_id", profile_udf("transcript").alias("p")
             ).select(
                 "clip_id",
-                *id_cols,
+                F.xxhash64("clip_id").alias("cid"),
                 "p.norm_text",
                 "p.simhash",
             )
@@ -121,13 +117,9 @@ class DedupPipeline:
                 profile.repartition(n_part),
                 profile,
                 detectors=cfg.detectors,
-                id_col=C.ID_KEY,
             )
             store.write("bands", bands)
         bands = store.read("bands")
-        # per-detector band stats (rows, exact distinct hashes, hot groups)
-        # are emitted by candidate_pairs from its sizing aggregation — no
-        # separate bands scan needed.
 
         if not store.is_committed("candidate_pairs"):
             pairs = candidate_pairs(
@@ -136,8 +128,6 @@ class DedupPipeline:
                 partitions=n_part,
                 max_pairs_per_group=cfg.max_pairs_per_group,
                 metrics_sink=sink,
-                pair_gen=cfg.pair_gen,
-                sizing=cfg.sizing,
             )
             store.write("candidate_pairs", pairs)
         pairs = store.read("candidate_pairs")

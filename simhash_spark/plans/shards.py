@@ -45,9 +45,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from simhash_spark import config as C
 from simhash_spark.operators.cc import assign_clusters, connected_components
-from simhash_spark.operators.lsh import candidate_pairs
+from simhash_spark.operators.lsh import (
+    can_verify,
+    candidate_pairs,
+    det_id_of_name,
+    det_name_col,
+)
 from simhash_spark.operators.verify import verify_pairs
 from simhash_spark.sources.tableio import CheckpointStore
 
@@ -58,7 +62,6 @@ def cross_shard_verified_pairs(
     partitions: int | None = None,
     metrics_sink=None,
     bkey_slices: int = 1,
-    gram_hits_min: int = 2,
 ) -> DataFrame:
     """Inter-shard verified duplicate pairs from per-shard checkpoints.
 
@@ -78,14 +81,13 @@ def cross_shard_verified_pairs(
     partials (gating per slice would drop pairs whose mh/gram hits
     split 1+1 across slices; equality vs the single pass is
     pytest-pinned in tests/test_shards.py)."""
-    key = C.ID_KEY  # 'cid' interior (default) or 'clip_id' legacy
     bands = None
     profiles = None
     owner = None
     for k, store in enumerate(shard_stores):
         b = store.read("bands")
         p = store.read("profile")
-        o = p.select(F.col(key).alias("_id"), F.lit(k).alias("_shard"))
+        o = p.select(F.col("cid").alias("_id"), F.lit(k).alias("_shard"))
         bands = b if bands is None else bands.unionByName(b)
         profiles = p if profiles is None else profiles.unionByName(p)
         owner = o if owner is None else owner.unionByName(o)
@@ -95,8 +97,6 @@ def cross_shard_verified_pairs(
             bands, partitions=partitions, metrics_sink=metrics_sink
         )
     else:
-        from simhash_spark.operators.lsh import DETS
-
         partials = None
         for k in range(bkey_slices):
             sl = bands.filter(F.pmod(F.xxhash64("bkey"), F.lit(bkey_slices)) == k)
@@ -104,9 +104,12 @@ def cross_shard_verified_pairs(
                 sl, partitions=partitions, metrics_sink=metrics_sink, gate=False
             )
             partials = p if partials is None else partials.unionByName(p)
-        det_pr = F.array_position(F.array(*[F.lit(d) for d in DETS]), F.col("det"))
+        # slice partials are already deduped, so their evidence counts are
+        # SUMMED (not re-counted as dedupe_pairs would); then the same
+        # source-side gate candidate_pairs applies, on the cross-slice
+        # totals
         merged = (
-            partials.withColumn("_pr", det_pr)
+            partials.withColumn("_pr", det_id_of_name(F.col("det")))
             .groupBy("a", "b")
             .agg(
                 F.min("_pr").alias("_pr"),
@@ -117,25 +120,13 @@ def cross_shard_verified_pairs(
             .select(
                 "a",
                 "b",
-                F.element_at(
-                    F.array(*[F.lit(d) for d in DETS]), F.col("_pr").cast("int")
-                ).alias("det"),
+                det_name_col(F.col("_pr").cast("int")).alias("det"),
                 "mh_hits",
                 "gram_hits",
                 "starred",
             )
         )
-        # the same source-side verifiability gate candidate_pairs applies
-        # (lsh.py), now on the cross-slice totals
-        pairs = merged.filter(
-            F.col("det").isin("exact", "sim")
-            | (F.col("mh_hits") >= 2)
-            | (F.col("gram_hits") >= gram_hits_min)
-            | (
-                (F.col("starred") == 1)
-                & ((F.col("mh_hits") >= 1) | (F.col("gram_hits") >= 1))
-            )
-        )
+        pairs = merged.filter(can_verify())
     cross = (
         pairs.join(
             owner.select(F.col("_id").alias("a"), F.col("_shard").alias("_sa")), "a"

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from simhash_spark.config import EngineConfig
 from simhash_spark.functions.signatures import normalize_udf, profile_udf, simhash64_udf
-from simhash_spark.operators.lsh import DETS, build_bands, det_id_col
+from simhash_spark.operators.lsh import build_bands, dedupe_pairs, det_id_col
 from simhash_spark.operators.verify import verify_pairs
 from simhash_spark.sources.tableio import CheckpointStore
 
@@ -220,27 +220,7 @@ class IncrementalDedup:
             .unionByName(star)
             .unionByName(bridge)
         )
-        # same dedupe + evidence-count shape as operators/lsh.candidate_pairs
-        # (det_id order IS the exact > sim > mh > gram priority)
-        pairs = (
-            coll.groupBy("a", "b")
-            .agg(
-                F.min("det_id").alias("det_pr"),
-                F.sum(F.when(F.col("det_id") == 2, 1).otherwise(0)).alias("mh_hits"),
-                F.sum(F.when(F.col("det_id") == 3, 1).otherwise(0)).alias("gram_hits"),
-                F.max("starred").alias("starred"),
-            )
-            .select(
-                "a",
-                "b",
-                F.element_at(
-                    F.array(*[F.lit(d) for d in DETS]), F.col("det_pr") + 1
-                ).alias("det"),
-                "mh_hits",
-                "gram_hits",
-                "starred",
-            )
-        )
+        pairs = dedupe_pairs(coll)
 
         # --- VERIFY: identical rule/tiers as the batch pipeline. The
         # verify side table is pruned to the buckets of the ids that

@@ -119,7 +119,7 @@ def _mk_bkey(det_id: int, band_id: int, band_hash: int) -> int:
 def test_source_gate_drops_unverifiable_pairs_and_logs(spark, tmp_path):
     # Hand-crafted band table: (x,y) share ONE mh band (mh_hits=1 — can
     # never pass the tier-2 jaccard gate), (g,h) share ONE gram
-    # (gram_hits=1 < gram_hits_min), (p,q) share TWO mh bands (kept).
+    # (gram_hits=1 < config.MIN_GRAM_HITS), (p,q) share TWO mh bands (kept).
     rows = [
         ("x", _mk_bkey(2, 0, 111)), ("y", _mk_bkey(2, 0, 111)),
         ("g", _mk_bkey(3, 0, 222)), ("h", _mk_bkey(3, 0, 222)),
@@ -143,35 +143,6 @@ def test_source_gate_drops_unverifiable_pairs_and_logs(spark, tmp_path):
     CheckpointStore(spark, str(tmp_path / "gate-ckpt")).write("candidate_pairs", pairs)
     logged = [(n, v) for n, v, _ in metrics if n == "ungated_pairs_dropped"]
     assert logged == [("ungated_pairs_dropped", 2)]
-
-
-def test_pair_gen_agg_matches_join(spark):
-    # docstring contract: 'agg' (collect_set + double explode) and 'join'
-    # (sort-merge self-join) emit the identical pair set INCLUDING the
-    # per-detector hit counts and star flags, across exact dups,
-    # hamming-near dups, token dups and a hot over-cap band group.
-    long = " ".join(f"word{i}" for i in range(40))
-    rows = (
-        [("a", long), ("b", long), ("c", long.replace("word20", "wordXX"))]
-        + [(f"h{i:03d}", f"shared prefix words number{i}") for i in range(30)]
-        + [("z", "totally different thing entirely")]
-    )
-    norm, sigs = _norm_sig(spark, rows)
-    bands = build_bands(norm, sigs)
-
-    def snap(mode, sizing="join"):
-        return {
-            (r.a, r.b, r.det, r.mh_hits, r.gram_hits, r.starred)
-            for r in candidate_pairs(
-                bands, band_group_cap=5, gate=False, pair_gen=mode, sizing=sizing
-            ).collect()
-        }
-
-    assert snap("agg") == snap("join")
-    # 'window' sizing (count/min OVER bkey instead of the sizes join) must
-    # be pair-for-pair identical too, under both pair_gen modes.
-    assert snap("join", sizing="window") == snap("join")
-    assert snap("agg", sizing="window") == snap("join")
 
 
 def test_candidate_pairs_explicit_partitioning(spark):
@@ -304,35 +275,37 @@ def test_cc_cleanup_spares_concurrent_caches(spark, tmp_path):
     bystander.unpersist()
 
 
-def test_hot_stats_deferred_matches_eager(spark):
-    """r6: the deferred (Observation-riding) hot-band accounting must
-    report the same lsh_hot_band_groups / lsh_hot_band_rows_starred
-    values as the legacy eager collect."""
+def test_hot_stats_match_band_table(spark):
+    """The Observation-riding hot-band accounting must equal the values
+    computed directly from the band table: the non-exact bkey groups with
+    more than band_group_cap rows, and the sum of their sizes."""
     from simhash_spark.util import flush_deferred_metrics
 
     rows = [(f"h{i:03d}", f"shared prefix words number{i}") for i in range(30)]
     norm, sigs = _norm_sig(spark, rows)
     bands = build_bands(norm, sigs)
+    cap = 5
 
-    def hot_metrics(stats):
-        metrics = {}
-        df = candidate_pairs(
-            bands,
-            band_group_cap=5,
-            metrics_sink=lambda n, v, **t: metrics.setdefault(n, v),
-            stats=stats,
-        )
-        df.count()
-        flush_deferred_metrics(df)
-        return (
-            metrics["lsh_hot_band_groups"],
-            metrics["lsh_hot_band_rows_starred"],
-        )
+    metrics = {}
+    df = candidate_pairs(
+        bands,
+        band_group_cap=cap,
+        metrics_sink=lambda n, v, **t: metrics.setdefault(n, v),
+    )
+    df.count()
+    flush_deferred_metrics(df)
 
-    eager = hot_metrics("eager")
-    deferred = hot_metrics("deferred")
-    assert eager == deferred
-    assert eager[0] > 0 and eager[1] > 0
+    sizes = [
+        r.n
+        for r in bands.filter(F.shiftrightunsigned("bkey", 62) != 0)
+        .groupBy("bkey")
+        .agg(F.count("*").alias("n"))
+        .filter(F.col("n") > cap)
+        .collect()
+    ]
+    assert len(sizes) > 0
+    assert metrics["lsh_hot_band_groups"] == len(sizes)
+    assert metrics["lsh_hot_band_rows_starred"] == sum(sizes)
 
 
 def test_cc_driver_fastpath_matches_loop(spark, tmp_path):

@@ -90,54 +90,6 @@ def test_starred_edges_stay_eligible(spark):
     assert len(got) == 1  # verified via hamming or jaccard
 
 
-def test_text_filter_modes_identical(spark, monkeypatch):
-    """The 'semi' texts prefilter is an EXECUTION knob: the verified-pair
-    set must be byte-identical to the legacy 'full' shape (every
-    surviving pair's ids are in the semi-join filter by construction)."""
-    from simhash_spark import config as C
-
-    long = " ".join(f"w{i}" for i in range(40))
-    core = "unique shared span alpha bravo charlie delta echo foxtrot golf hotel india"
-    filler = " ".join(f"zz{i} yy{i} xx{i}" for i in range(30))
-    profile = _profile(
-        spark,
-        [
-            ("e1", "same text"),
-            ("e2", "same text"),
-            ("h1", long),
-            ("h2", long.replace("w20", "zz")),
-            ("j1", long),
-            ("j2", long.replace("w20", "zz") + " qq rr ss tt uu vv ww xx yy"),
-            ("s1", core),
-            ("s2", filler + " " + core),
-            ("n1", "alpha beta gamma"),
-            ("n2", "delta epsilon zeta"),
-        ],
-    )
-    pairs = _pairs(
-        spark,
-        [
-            ("e1", "e2", "exact", 0, 0, 0),
-            ("h1", "h2", "sim", 0, 0, 0),
-            ("j1", "j2", "mh", 5, 0, 0),
-            ("s1", "s2", "gram", 0, 6, 0),
-            ("n1", "n2", "mh", 5, 5, 0),
-        ],
-    )
-
-    def run():
-        return sorted(
-            (r.a, r.b, r.det, r.method, r.hamming)
-            for r in verify_pairs(pairs, profile).collect()
-        )
-
-    monkeypatch.setattr(C, "VERIFY_TEXT_FILTER", "semi")
-    semi = run()
-    monkeypatch.setattr(C, "VERIFY_TEXT_FILTER", "full")
-    full = run()
-    assert semi == full and len(semi) >= 3
-
-
 def _cid_profile(spark, rows):
     """(cid, clip_id, text) rows with the cid EXPLICIT, so a test can
     inject the xxhash64 collision that is unconstructable from real
@@ -169,9 +121,9 @@ def test_cid_mapback_roundtrip(spark):
 
 
 def test_cid_collision_raises_not_corrupts(spark):
-    """A cid carried by two clip_ids must FAIL the job (with the
-    SPARK_GRAFT_ID_KEY remediation named), never fan the map-back join
-    out into verified pairs between texts that were never compared."""
+    """A cid carried by two clip_ids must FAIL the job, never fan the
+    map-back join out into verified pairs between texts that were never
+    compared — and the message names no env-var fallback (none exists)."""
     import pytest
 
     profile = _cid_profile(
@@ -183,5 +135,6 @@ def test_cid_collision_raises_not_corrupts(spark):
         ],
     )
     pairs = _cid_pairs(spark, [(1, 2, "exact", 0, 0, 0)])
-    with pytest.raises(Exception, match="(?i)collision"):
+    with pytest.raises(Exception, match="(?i)collision") as err:
         verify_pairs(pairs, profile).collect()
+    assert "SPARK_GRAFT_" not in str(err.value)
