@@ -13,7 +13,8 @@ properties that matter for a long-lived ingest service:
      matches from durable state without recomputation (idempotent
      crash-retry, measured: replay wall and match-count equality),
 
-plus state-size accounting per batch (append-only: growth ~ batch rows).
+plus state-size and parquet file-count accounting per batch (append-only:
+growth ~ batch rows, and at most one file per touched bucket per table).
 
 Batches are deterministic hash slices (pmod(xxhash64(clip_id), K)), so
 the drill is reproducible bit-for-bit on the cached corpus.
@@ -39,6 +40,10 @@ sys.path.insert(0, REPO)
 def _du_mb(path: str) -> float:
     out = subprocess.run(["du", "-sm", path], capture_output=True, text=True)
     return float(out.stdout.split()[0]) if out.returncode == 0 else -1.0
+
+
+def _parquet_files(path: str) -> int:
+    return sum(n.endswith(".parquet") for _r, _d, names in os.walk(path) for n in names)
 
 
 def main() -> None:
@@ -95,6 +100,7 @@ def main() -> None:
                 "matches": n,
                 "wall_sec": round(wall, 1),
                 "state_mb": _du_mb(state),
+                "state_files": _parquet_files(state),
             }
         )
         print(json.dumps(legs[-1]))

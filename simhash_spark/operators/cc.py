@@ -34,6 +34,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from simhash_spark.util import local_ckpt, unpersist_ckpts
+
 #: Edge-count ceiling for the driver-side union-find fast path (r6
 #: optimization, guide §1.2: the distributed min-label loop costs one
 #: Spark job PER ROUND plus the edge symmetrize/dedup job — ~2.8 s of
@@ -69,26 +71,6 @@ def _cc_labels_numpy(u: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
             return L
 
 
-def _local_ckpt(df: DataFrame):
-    """Eager localCheckpoint + a DIRECT handle to the checkpointed RDD
-    (the LogicalRDD the new plan is rebased onto). Cleanup unpersists
-    exactly what CC created — the previous set-diff over the context's
-    global getPersistentRDDs map attributed any concurrently-persisted
-    blocks (a streaming query, a second pipeline on the same session) to
-    'this round' and unpersisted them out from under their owners
-    (ADVICE r2)."""
-    cdf = df.localCheckpoint()
-    return cdf, cdf._jdf.queryExecution().analyzed().rdd()
-
-
-def _unpersist(handles) -> None:
-    for h in handles:
-        try:
-            h.unpersist(False)
-        except Exception:
-            pass
-
-
 def connected_components(
     edges: DataFrame,
     max_iters: int = 50,
@@ -122,7 +104,7 @@ def connected_components(
     ):
         return _connected_components_driver(e, metrics_sink, store, stage)
     sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    sym, sym_h = _local_ckpt(sym.dropDuplicates(["a", "b"]))
+    sym, sym_h = local_ckpt(sym.dropDuplicates(["a", "b"]))
 
     resumed = store is not None and store.is_committed(stage)
     prev_h: list = []  # handle(s) of the CURRENT round's checkpointed labels
@@ -131,7 +113,7 @@ def connected_components(
         if metrics_sink is not None:
             metrics_sink("cc_resume", 1, stage=stage)
     else:
-        labels, h = _local_ckpt(
+        labels, h = local_ckpt(
             sym.select(F.col("a").alias("id")).distinct().withColumn("comp", F.col("id"))
         )
         prev_h = [h]
@@ -147,7 +129,7 @@ def connected_components(
             .agg(F.min("comp").alias("nbr_comp"))
         )
         obs = Observation(f"cc_iter_{it}")
-        new_labels, new_h = _local_ckpt(  # one action per round: ckpt + observed count
+        new_labels, new_h = local_ckpt(  # one action per round: ckpt + observed count
             labels.join(nbr_min, "id", "left")
             .select(
                 "id",
@@ -163,7 +145,7 @@ def connected_components(
         )
         changed = int(obs.get["changed"] or 0)
         # round r is materialized -> free round r-1's localCheckpoint blocks.
-        _unpersist(prev_h)
+        unpersist_ckpts(prev_h)
         prev_h = [new_h]
         labels = new_labels
         if metrics_sink is not None:
@@ -172,7 +154,7 @@ def connected_components(
             # durable mid-loop checkpoint: survives executor/driver loss.
             store.write(stage, labels)
             labels = store.read(stage)
-            _unpersist(prev_h)
+            unpersist_ckpts(prev_h)
             prev_h = []
         if changed == 0:
             break
@@ -185,10 +167,10 @@ def connected_components(
         # be freed immediately.
         store.write(stage, labels)
         labels = store.read(stage)
-        _unpersist(prev_h)
+        unpersist_ckpts(prev_h)
         prev_h = []
     # sym is CC-internal either way: the returned labels never reference it.
-    _unpersist([sym_h])
+    unpersist_ckpts([sym_h])
 
     return labels.select(F.col("id").alias("clip_id"), F.col("comp").alias("cluster_id"))
 

@@ -46,14 +46,8 @@ from simhash_spark.functions.signatures import hamming_col, jaccard_udf
 from simhash_spark.operators.lsh import needs_jaccard, needs_substring
 from simhash_spark.util import track_persisted
 
-_OUT_COLS = ["a", "b", "det", "method", "hamming", "jaccard"]
 
-
-def verify_pairs(
-    pairs: DataFrame,
-    profile: DataFrame,
-    metrics_sink=None,
-) -> DataFrame:
+def verify_pairs(pairs: DataFrame, profile: DataFrame) -> DataFrame:
     """pairs(a, b, det, mh_hits, gram_hits, starred) ->
     verified_pairs(a, b, det, method, hamming, jaccard).
 

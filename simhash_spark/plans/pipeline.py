@@ -133,7 +133,7 @@ class DedupPipeline:
         pairs = store.read("candidate_pairs")
 
         if not store.is_committed("verified_pairs"):
-            verified = verify_pairs(pairs, profile, metrics_sink=sink)
+            verified = verify_pairs(pairs, profile)
             store.write("verified_pairs", verified)
         verified = store.read("verified_pairs")
 

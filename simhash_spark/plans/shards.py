@@ -135,7 +135,7 @@ def cross_shard_verified_pairs(
         .filter(F.col("_sa") != F.col("_sb"))
         .drop("_sa", "_sb")
     )
-    return verify_pairs(cross, profiles, metrics_sink=metrics_sink)
+    return verify_pairs(cross, profiles)
 
 
 def merge_shard_runs(

@@ -174,7 +174,7 @@ class CheckpointStore:
         with open(p) as f:
             return json.load(f)
 
-    def write(self, stage: str, df: DataFrame, partition_by: list[str] | None = None) -> dict:
+    def write(self, stage: str, df: DataFrame) -> dict:
         """Write ``df`` as the committed content of ``stage`` (idempotent
         overwrite). Returns the manifest. Records per-file (=per written
         partition) row counts into _lineage.jsonl. Releases any upstream
@@ -184,10 +184,7 @@ class CheckpointStore:
             # Iceberg path: atomic snapshot replace; lineage from the
             # snapshot's own manifests.
             ident = f"{self.catalog}.{self.namespace}.{stage}"
-            w = df.writeTo(ident)
-            if partition_by:
-                w = w.partitionedBy(*[df[c] for c in partition_by])
-            w.createOrReplace()
+            df.writeTo(ident).createOrReplace()
             flush_deferred_metrics(df)  # observed aggs rode the write pass
             release_persisted(df)
             manifest = {"stage": stage, "iceberg_table": ident, "semantics": _sem_json()}
@@ -198,10 +195,7 @@ class CheckpointStore:
         token = uuid.uuid4().hex[:12]
         data_dir = os.path.join(sdir, f"data-{token}")
         t0 = time.time()
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(data_dir)
+        df.write.mode("overwrite").parquet(data_dir)
         flush_deferred_metrics(df)  # observed aggs rode the write pass
         release_persisted(df)
         # per-file lineage from parquet FOOTERS (no Spark scan — footer
@@ -280,11 +274,16 @@ class CheckpointStore:
         ``partition_by`` dir-encodes that column inside the batch's data
         dir (Iceberg bucket-partitioning analog), letting ``read_pruned``
         serve bucket-restricted reads without scanning the whole stage.
+        Rows are first clustered by that column (one hash exchange), so
+        each bucket is written by one task: a batch adds at most one file
+        per touched bucket, however the input is partitioned.
         The spec (column + ``n_buckets``) is pinned in the manifest on
         first append; a later append under a different spec is REFUSED —
         silently mixing bucket layouts would make pruned reads miss rows.
         """
         if self.catalog is not None:
+            # partition_by is not applied to the Iceberg table, so there
+            # is no per-bucket file fan-out to cluster away
             ident = f"{self.catalog}.{self.namespace}.{stage}"
             df.writeTo(ident).append()
             flush_deferred_metrics(df)
@@ -316,7 +315,8 @@ class CheckpointStore:
         os.makedirs(sdir, exist_ok=True)
         data_dir = os.path.join(sdir, f"data-{token}")
         t0 = time.time()
-        writer = df.write.mode("overwrite")
+        out = df.repartition(partition_by) if partition_by else df
+        writer = out.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(partition_by)
         writer.parquet(data_dir)
@@ -450,13 +450,8 @@ class CheckpointStore:
         batch's real output; see streaming/incremental.py). ``schema``
         is the fallback for an empty batch whose data dir holds no
         parquet parts."""
-        m = self.read_manifest(stage)
-        token = batch_token(batch_id)
-        if m is None or token not in m.get("batch_tokens", []):
-            raise FileNotFoundError(f"batch {batch_id!r} not in stage {stage!r}")
-        data_dir = os.path.join(self._stage_dir(stage), f"data-{token}")
-        has_parts = bool(_parquet_file_rows(data_dir)) if os.path.isdir(data_dir) else False
-        if not has_parts:
+        data_dir, files = self._batch_files(stage, batch_id)
+        if not files:
             if schema is None:
                 raise FileNotFoundError(
                     f"batch {batch_id!r} of stage {stage!r} has no parquet parts "
@@ -464,6 +459,19 @@ class CheckpointStore:
                 )
             return self.spark.createDataFrame([], schema)
         return self.spark.read.parquet(data_dir)
+
+    def batch_rows(self, stage: str, batch_id: str) -> int:
+        """Row count of ``batch_id``'s append to ``stage``, from its
+        parquet footers (no Spark job)."""
+        return sum(r["count"] for r in self._batch_files(stage, batch_id)[1])
+
+    def _batch_files(self, stage: str, batch_id: str) -> tuple[str, list[dict]]:
+        m = self.read_manifest(stage)
+        token = batch_token(batch_id)
+        if m is None or token not in m.get("batch_tokens", []):
+            raise FileNotFoundError(f"batch {batch_id!r} not in stage {stage!r}")
+        data_dir = os.path.join(self._stage_dir(stage), f"data-{token}")
+        return data_dir, _parquet_file_rows(data_dir) if os.path.isdir(data_dir) else []
 
     def invalidate_from(self, stages: list[str], first_dirty: str) -> None:
         """Drop manifests of ``first_dirty`` and all later stages."""

@@ -30,6 +30,7 @@ from simhash_spark.functions.signatures import normalize_udf, profile_udf, simha
 from simhash_spark.operators.lsh import build_bands, dedupe_pairs, det_id_col
 from simhash_spark.operators.verify import verify_pairs
 from simhash_spark.sources.tableio import CheckpointStore
+from simhash_spark.util import local_ckpt, unpersist_ckpts
 
 
 class IncrementalDedup:
@@ -53,6 +54,14 @@ class IncrementalDedup:
     watermark anti-join and the verify side table): a matching row can
     only live in its key's bucket. ``n_buckets`` is pinned in each
     stage's manifest on first append; mixed layouts are refused.
+    Write-side, each append is clustered by bucket, so a batch adds at
+    most one file per touched bucket per table (<= ``n_buckets``).
+
+    Per-batch fixed cost: the deduped candidate pairs are truncated by an
+    eager local checkpoint, so verify plans over one leaf rather than the
+    whole ingest lineage. Those blocks are not durable: a lost executor
+    fails the batch while ``matches`` is being appended, before any state
+    is committed, and the idempotent retry recomputes the batch.
 
     ``ingest(new_clips)`` returns VERIFIED duplicate pairs
     (a, b, det, method, hamming, jaccard) of new clips against the
@@ -220,13 +229,13 @@ class IncrementalDedup:
             .unionByName(star)
             .unionByName(bridge)
         )
-        pairs = dedupe_pairs(coll)
+        # short lineage for verify; not durable (see the class docstring)
+        pairs, pairs_h = local_ckpt(dedupe_pairs(coll))
 
         # --- VERIFY: identical rule/tiers as the batch pipeline. The
         # verify side table is pruned to the buckets of the ids that
         # actually occur in pairs (bounded collect: pairs are the small
         # post-banding survivor set), plus the batch's own profiles.
-        pairs = pairs.persist()
         pair_ids = pairs.select(F.col("a").alias("pid")).unionByName(
             pairs.select(F.col("b").alias("pid"))
         )
@@ -263,7 +272,7 @@ class IncrementalDedup:
                 groups=int(hot_stats["groups"]),
                 cap=self.cfg.band_group_cap,
             )
-        pairs.unpersist()
+        unpersist_ckpts([pairs_h])
         self.store.append(
             "band_index",
             new_bands,
@@ -280,7 +289,7 @@ class IncrementalDedup:
         )
         self.store.append(
             "seen_ids",
-            fresh.select("clip_id").withColumn("bkt", self._id_bkt("clip_id")),
+            prof_new.select("clip_id").withColumn("bkt", self._id_bkt("clip_id")),
             batch_id=batch_id,
             partition_by="bkt",
             n_buckets=self.n_buckets,
@@ -288,12 +297,13 @@ class IncrementalDedup:
         sizes.unpersist()
         new_bands.unpersist()
         prof_new.unpersist()
-        # Serve the durable copy: parquet-backed, fault-tolerant, replayable.
-        matches = self.store.read_batch("matches", batch_id, self.MATCHES_SCHEMA)
         self.store.append_metric(
-            "incremental_ingest_matches", matches.count(), batch_id=batch_id
+            "incremental_ingest_matches",
+            self.store.batch_rows("matches", batch_id),
+            batch_id=batch_id,
         )
-        return matches
+        # Serve the durable copy: parquet-backed, fault-tolerant, replayable.
+        return self.store.read_batch("matches", batch_id, self.MATCHES_SCHEMA)
 
 
 def streaming_signatures(

@@ -24,6 +24,31 @@ def release_persisted(df: DataFrame) -> None:
     df._persisted_deps = []
 
 
+def local_ckpt(df: DataFrame):
+    """Eager localCheckpoint + a DIRECT handle to the checkpointed RDD
+    (the LogicalRDD the new plan is rebased onto), for ``unpersist_ckpts``.
+    Truncates the lineage: later plans over the result analyze one leaf
+    instead of the whole upstream plan. Releasing through the handle
+    frees exactly what the caller created — a set-diff over the context's
+    global getPersistentRDDs map would attribute concurrently-persisted
+    blocks (a streaming query, a second pipeline on the same session) to
+    the caller and unpersist them out from under their owners (ADVICE r2).
+
+    The blocks live in executor storage only: losing an executor loses
+    them, and any job still reading the result fails (no recompute)."""
+    cdf = df.localCheckpoint()
+    return cdf, cdf._jdf.queryExecution().analyzed().rdd()
+
+
+def unpersist_ckpts(handles) -> None:
+    """Free the blocks of ``local_ckpt`` handles (non-blocking)."""
+    for h in handles:
+        try:
+            h.unpersist(False)
+        except Exception:
+            pass
+
+
 def defer_metric(df: DataFrame, observation, key: str, emit) -> DataFrame:
     """Record an Observation-backed metric on ``df`` to be flushed by
     whoever materializes it (CheckpointStore.write / flush_deferred_metrics):

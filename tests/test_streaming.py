@@ -243,3 +243,34 @@ def test_incremental_hot_group_stars_stay_connected_across_batches(spark, tmp_pa
     ]
     hot = [m for m in metrics if m["metric"] == "incremental_hot_band_rows_starred"]
     assert hot and hot[0]["value"] > 0
+
+
+def test_ingest_releases_storage_and_counts_matches_exactly(spark, tmp_path):
+    """A long-lived ingest driver must not accumulate executor storage:
+    after two batches the context holds exactly the persisted RDDs it
+    held before (the truncated candidate pairs included). Each batch's
+    ``incremental_ingest_matches`` metric equals the rows it returned."""
+    import json
+    import os
+
+    long = " ".join(f"word{i}" for i in range(40))
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    inc = IncrementalDedup(spark, str(tmp_path))
+    got = {
+        "s0": inc.ingest(
+            _clips(spark, [("a", long), ("b", "alpha beta gamma"), ("c", "alpha beta gamma")]),
+            batch_id="s0",
+        ).count(),
+        "s1": inc.ingest(
+            _clips(spark, [("d", long.replace("word20", "wordXX")), ("e", "alpha beta gamma")]),
+            batch_id="s1",
+        ).count(),
+    }
+    assert jsc.getPersistentRDDs().size() == before
+    assert got["s0"] >= 1 and got["s1"] >= 2
+    metrics = [json.loads(line) for line in open(os.path.join(tmp_path, "_metrics.jsonl"))]
+    counted = {
+        m["batch_id"]: m["value"] for m in metrics if m["metric"] == "incremental_ingest_matches"
+    }
+    assert counted == got
