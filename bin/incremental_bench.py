@@ -14,7 +14,9 @@ properties that matter for a long-lived ingest service:
      crash-retry, measured: replay wall and match-count equality),
 
 plus state-size and parquet file-count accounting per batch (append-only:
-growth ~ batch rows, and at most one file per touched bucket per table).
+growth ~ batch rows, in a few bucket-sorted files per table per batch,
+sized by rows rather than by touched buckets). The state dir is removed
+when the drill ends.
 
 Batches are deterministic hash slices (pmod(xxhash64(clip_id), K)), so
 the drill is reproducible bit-for-bit on the cached corpus.
@@ -28,6 +30,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -82,47 +85,50 @@ def main() -> None:
     if state_base:
         os.makedirs(state_base, exist_ok=True)
     state = tempfile.mkdtemp(prefix=f"inc-{args.rows}-", dir=state_base)
-    inc = IncrementalDedup(spark, state, EngineConfig(partitions=sp))
+    try:
+        inc = IncrementalDedup(spark, state, EngineConfig(partitions=sp))
 
-    legs = []
-    for k in range(args.batches):
+        legs = []
+        for k in range(args.batches):
+            batch = clips.filter(
+                F.pmod(F.xxhash64("clip_id"), F.lit(args.batches)) == k
+            )
+            t0 = time.time()
+            matches = inc.ingest(batch, batch_id=f"drill-{k}")
+            n = matches.count()
+            wall = time.time() - t0
+            legs.append(
+                {
+                    "batch": k,
+                    "rows": batch.count(),
+                    "matches": n,
+                    "wall_sec": round(wall, 1),
+                    "state_mb": _du_mb(state),
+                    "state_files": _parquet_files(state),
+                }
+            )
+            print(json.dumps(legs[-1]))
+
+        # replay an already-watermarked token: durable re-emit, no recompute
+        replay_batch = args.batches // 2
         batch = clips.filter(
-            F.pmod(F.xxhash64("clip_id"), F.lit(args.batches)) == k
+            F.pmod(F.xxhash64("clip_id"), F.lit(args.batches)) == replay_batch
         )
+        size_before = _du_mb(state)
         t0 = time.time()
-        matches = inc.ingest(batch, batch_id=f"drill-{k}")
-        n = matches.count()
-        wall = time.time() - t0
-        legs.append(
-            {
-                "batch": k,
-                "rows": batch.count(),
-                "matches": n,
-                "wall_sec": round(wall, 1),
-                "state_mb": _du_mb(state),
-                "state_files": _parquet_files(state),
-            }
-        )
-        print(json.dumps(legs[-1]))
-
-    # replay an already-watermarked token: durable re-emit, no recompute
-    replay_batch = args.batches // 2
-    batch = clips.filter(
-        F.pmod(F.xxhash64("clip_id"), F.lit(args.batches)) == replay_batch
-    )
-    size_before = _du_mb(state)
-    t0 = time.time()
-    n_replay = inc.ingest(batch, batch_id=f"drill-{replay_batch}").count()
-    replay = {
-        "batch": replay_batch,
-        "matches": n_replay,
-        "matches_first_run": legs[replay_batch]["matches"],
-        "wall_sec": round(time.time() - t0, 1),
-        "first_run_wall_sec": legs[replay_batch]["wall_sec"],
-        "state_mb_before": size_before,
-        "state_mb_after": _du_mb(state),
-    }
-    print(json.dumps({"replay": replay}))
+        n_replay = inc.ingest(batch, batch_id=f"drill-{replay_batch}").count()
+        replay = {
+            "batch": replay_batch,
+            "matches": n_replay,
+            "matches_first_run": legs[replay_batch]["matches"],
+            "wall_sec": round(time.time() - t0, 1),
+            "first_run_wall_sec": legs[replay_batch]["wall_sec"],
+            "state_mb_before": size_before,
+            "state_mb_after": _du_mb(state),
+        }
+        print(json.dumps({"replay": replay}))
+    finally:
+        shutil.rmtree(state, ignore_errors=True)
 
     walls = [l["wall_sec"] for l in legs]
     result = {

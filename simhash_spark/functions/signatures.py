@@ -141,19 +141,6 @@ def jaccard_udf(norm_a: pd.Series, norm_b: pd.Series) -> pd.Series:
     )
 
 
-@F.pandas_udf(T.BooleanType())
-def substring_contained_udf(norm_a: pd.Series, norm_b: pd.Series) -> pd.Series:
-    """True if the shorter side (>= SUBSTR_MIN_LEN chars) is a verbatim
-    substring of the longer (verification path)."""
-    return pd.Series(
-        [
-            R.substring_contained(a, b)
-            for a, b in zip(norm_a.fillna(""), norm_b.fillna(""))
-        ],
-        dtype="bool",
-    )
-
-
 # ---------------------------------------------------------------------------
 # JVM-side (no-UDF) column expressions — stay inside whole-stage codegen
 # ---------------------------------------------------------------------------
@@ -186,13 +173,3 @@ def simhash_table_key_cols(sig: Column | str) -> list[Column]:
             key = F.shiftleft(key, C.SIM_BLOCK_WIDTHS[b]).bitwiseOR(blocks[b])
         keys.append(key)
     return keys
-
-
-def norm_text_col(text: Column | str) -> Column:
-    """JVM-side normalization for SQL-oracle-comparable paths: lower +
-    trim + collapse whitespace. NOTE: this is NOT the pinned pipeline
-    normalization (no NFC/casefold) — use normalize_udf in the pipeline;
-    this exists for oracle-checkable queries where DuckDB must reproduce
-    it exactly."""
-    text = F.col(text) if isinstance(text, str) else text
-    return F.regexp_replace(F.trim(F.lower(text)), r"\s+", " ")

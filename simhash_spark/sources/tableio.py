@@ -9,10 +9,21 @@ temp dir, fsync, then ATOMIC RENAME of a manifest
 
 Layout per stage::
 
-    <base>/<stage>/data-<token>/   parquet files (Spark-written)
+    <base>/<stage>/data-<token>/   parquet files (Spark-written): one dir
+                                   per write(), or per append()ed batch
     <base>/<stage>/MANIFEST.json   atomic pointer {token, rows, semantics,...}
     <base>/_lineage.jsonl          append-only stage-commit log (per-file rows)
     <base>/_metrics.jsonl          append-only metrics events
+
+A BUCKETED stage (``append(partition_by=)``, ``layout`` 2 in its
+manifest) holds in each batch dir a few parquet files sorted by the
+bucket column, and its manifest lists every file with its ``[min, max]``
+bucket range. ``read_pruned`` opens only the files whose range meets the
+asked buckets, so it lists no directory. The incremental state
+(streaming/incremental.py) is three appended tables: ``matches``
+(unbucketed, one batch's output per dir), ``band_index`` bucketed by
+band key and ``profile`` bucketed by clip id, whose batch token is the
+watermark.
 
 A stage is COMMITTED iff MANIFEST.json exists and its semantics
 fingerprint matches config.SEMANTICS — a resume under different signature
@@ -21,6 +32,7 @@ semantics is refused rather than silently mixed.
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import shutil
@@ -36,6 +48,12 @@ from simhash_spark.util import flush_deferred_metrics, release_persisted
 
 class IcebergUnavailable(RuntimeError):
     pass
+
+
+#: On-disk layout of bucketed (``append(partition_by=)``) stages, pinned
+#: in their manifests: 2 = bucket-sorted files with per-file bucket
+#: ranges in the manifest. Earlier states (``bkt=`` dirs) are refused.
+BUCKET_LAYOUT = 2
 
 
 _SAFE_TOKEN = __import__("re").compile(r"^[A-Za-z0-9_.\-]{1,32}$")
@@ -172,7 +190,14 @@ class CheckpointStore:
         if not os.path.exists(p):
             return None
         with open(p) as f:
-            return json.load(f)
+            m = json.load(f)
+        if m.get("bucket_spec") and m.get("layout") != BUCKET_LAYOUT:
+            raise RuntimeError(
+                f"stage {stage!r} in {self.base} holds bucketed state in an older "
+                f"file layout (its manifest pins no layout {BUCKET_LAYOUT}), which "
+                "this version cannot read; start a fresh state dir and ingest again"
+            )
+        return m
 
     def write(self, stage: str, df: DataFrame) -> dict:
         """Write ``df`` as the committed content of ``stage`` (idempotent
@@ -271,19 +296,24 @@ class CheckpointStore:
         append IDEMPOTENT: a crash-and-retry with the same batch_id is a
         no-op, so state can never bloat across retries.
 
-        ``partition_by`` dir-encodes that column inside the batch's data
-        dir (Iceberg bucket-partitioning analog), letting ``read_pruned``
-        serve bucket-restricted reads without scanning the whole stage.
-        Rows are first clustered by that column (one hash exchange), so
-        each bucket is written by one task: a batch adds at most one file
-        per touched bucket, however the input is partitioned.
-        The spec (column + ``n_buckets``) is pinned in the manifest on
-        first append; a later append under a different spec is REFUSED —
-        silently mixing bucket layouts would make pruned reads miss rows.
+        ``partition_by`` names the bucket column of a BUCKETED stage.
+        The batch is range-clustered and sorted by it before a plain
+        parquet write, so AQE sizes the files by rows (a few per batch,
+        however many buckets it touches) and each file covers one
+        contiguous bucket range. That ``[min, max]`` range is read from
+        the file's parquet footer and recorded in the manifest's
+        ``files`` list, which is what ``read_pruned`` prunes by (the
+        Iceberg manifest column-range analog). Range, not hash,
+        clustering: a hash-clustered file spans almost every bucket, so
+        its range could never prune. The spec (column + ``n_buckets``)
+        and ``layout`` are pinned in the manifest on first append; a
+        later append under a different spec is REFUSED — silently mixing
+        bucket layouts would make pruned reads miss rows.
         """
         if self.catalog is not None:
-            # partition_by is not applied to the Iceberg table, so there
-            # is no per-bucket file fan-out to cluster away
+            # partition_by is not applied to the Iceberg table: it is
+            # written unclustered and read back whole (read_pruned is
+            # parquet-manifest only)
             ident = f"{self.catalog}.{self.namespace}.{stage}"
             df.writeTo(ident).append()
             flush_deferred_metrics(df)
@@ -315,14 +345,13 @@ class CheckpointStore:
         os.makedirs(sdir, exist_ok=True)
         data_dir = os.path.join(sdir, f"data-{token}")
         t0 = time.time()
-        out = df.repartition(partition_by) if partition_by else df
-        writer = out.write.mode("overwrite")
+        out = df
         if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(data_dir)
+            out = df.repartitionByRange(partition_by).sortWithinPartitions(partition_by)
+        out.write.mode("overwrite").parquet(data_dir)
         flush_deferred_metrics(df)
         release_persisted(df)
-        files = _parquet_file_rows(data_dir)
+        files = _parquet_file_rows(data_dir, range_col=partition_by)
         rows = sum(r["count"] for r in files)
         manifest = {
             "stage": stage,
@@ -339,6 +368,19 @@ class CheckpointStore:
             "semantics": _sem_json(),
             "run_config": self.run_config,
         }
+        if spec:
+            # one entry per non-empty file, path relative to the stage dir
+            manifest["layout"] = BUCKET_LAYOUT
+            manifest["files"] = (m["files"] if m else []) + [
+                {
+                    "file": os.path.join(os.path.basename(data_dir), r["file"]),
+                    "rows": r["count"],
+                    "min": r["min"],
+                    "max": r["max"],
+                }
+                for r in files
+                if r["count"]
+            ]
         tmp = self._manifest_path(stage) + f".tmp-{token[:12]}"
         with open(tmp, "w") as f:
             json.dump(manifest, f)
@@ -372,15 +414,16 @@ class CheckpointStore:
             )
         if m.get("bucket_spec"):
             return self.read_pruned(stage, values=None)
+        return self._scan(m, _data_dirs(m))
+
+    def _scan(self, m: dict, paths: list[str]) -> DataFrame:
+        """Parquet scan of ``paths`` under the manifest's pinned schema —
+        passing it skips the per-read footer-inference job (r6). Falls
+        back to inference for pre-schema manifests."""
         reader = self.spark.read
         if m.get("schema"):
-            # the manifest pins the exact schema the stage was written
-            # with — passing it skips the per-read footer-inference job
-            # (r6). Falls back to inference for pre-schema manifests.
-            from pyspark.sql import types as T
-
-            reader = reader.schema(T.StructType.fromJson(json.loads(m["schema"])))
-        return reader.parquet(*_data_dirs(m))
+            reader = reader.schema(_schema(m))
+        return reader.parquet(*paths)
 
     def bucket_spec(self, stage: str) -> dict | None:
         """The pinned {col, n} bucket layout of ``stage`` (None if the
@@ -389,53 +432,42 @@ class CheckpointStore:
         return m.get("bucket_spec") if m else None
 
     def pruned_paths(self, stage: str, values=None) -> list[str]:
-        """The exact leaf data paths a (pruned) read of ``stage`` touches.
-        For a bucketed stage each batch dir holds ``col=<v>`` subdirs;
-        ``values`` restricts to those buckets (None = all). Exposed so
+        """The exact data files a (pruned) read of bucketed ``stage``
+        touches: the manifest's files whose recorded bucket range meets
+        ``values`` (None = all files); no directory is listed. Exposed so
         tests can assert read-side pruning is real, not planner luck."""
-        m = self.read_manifest(stage)
-        if m is None:
-            raise FileNotFoundError(f"stage {stage!r} not committed under {self.base}")
-        spec = m.get("bucket_spec")
-        paths: list[str] = []
-        for d in _data_dirs(m):
-            if spec:
-                if values is not None:
-                    subs = [
-                        os.path.join(d, f"{spec['col']}={int(v)}") for v in sorted(set(values))
-                    ]
-                    paths.extend(s for s in subs if os.path.isdir(s))
-                else:
-                    paths.extend(
-                        sorted(
-                            os.path.join(d, s)
-                            for s in os.listdir(d)
-                            if s.startswith(f"{spec['col']}=")
-                        )
-                    )
-            else:
-                paths.append(d)
-        return paths
+        files = self._bucketed_manifest(stage)["files"]
+        if values is not None:
+            want = sorted({int(v) for v in values})
+            files = [f for f in files if _meets(want, f["min"], f["max"])]
+        return [os.path.join(self._stage_dir(stage), f["file"]) for f in files]
 
-    def read_pruned(
-        self, stage: str, values=None, schema: str | None = None
-    ) -> DataFrame:
-        """Read ONLY the buckets in ``values`` of a bucketed stage — the
-        O(touched) state read an incremental micro-batch needs instead of
-        scanning the whole accumulated table (VERDICT r2 #3). Lossless
-        for equi-joins keyed by the bucketed column: a matching row can
-        only live in its own bucket. The dir-encoded bucket column is NOT
-        re-materialized (readers join on the data columns). ``schema``
-        is the empty-result fallback when no bucket dir exists."""
+    def read_pruned(self, stage: str, values=None) -> DataFrame:
+        """Read ONLY the rows in buckets ``values`` of a bucketed stage —
+        the O(touched) state read an incremental micro-batch needs
+        instead of scanning the whole accumulated table (VERDICT r2 #3).
+        The scan opens only the files whose manifest range meets
+        ``values``, under the pinned schema; a ``bucket IN (values)``
+        filter then drops the other buckets those files hold.
+        Lossless for equi-joins keyed by the bucketed column: a matching
+        row can only live in its own bucket. The bucket column is
+        dropped (readers join on the data columns)."""
+        m = self._bucketed_manifest(stage)
+        col = m["bucket_spec"]["col"]
         paths = self.pruned_paths(stage, values)
         if not paths:
-            if schema is None:
-                raise FileNotFoundError(
-                    f"no data paths for stage {stage!r} (values={values!r}) "
-                    "and no fallback schema was given"
-                )
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(*paths)
+            df = self.spark.createDataFrame([], _schema(m))
+        else:
+            df = self._scan(m, paths)
+        if values is not None:
+            df = df.filter(F.col(col).isin(sorted({int(v) for v in values})))
+        return df.drop(col)
+
+    def _bucketed_manifest(self, stage: str) -> dict:
+        m = self.read_manifest(stage)
+        if m is None or not m.get("bucket_spec"):
+            raise FileNotFoundError(f"no bucketed stage {stage!r} under {self.base}")
+        return m
 
     def has_batch(self, stage: str, batch_id: str) -> bool:
         """True iff ``batch_id``'s append to ``stage`` is durably committed
@@ -450,7 +482,7 @@ class CheckpointStore:
         batch's real output; see streaming/incremental.py). ``schema``
         is the fallback for an empty batch whose data dir holds no
         parquet parts."""
-        data_dir, files = self._batch_files(stage, batch_id)
+        m, data_dir, files = self._batch_files(stage, batch_id)
         if not files:
             if schema is None:
                 raise FileNotFoundError(
@@ -458,20 +490,20 @@ class CheckpointStore:
                     "and no fallback schema was given"
                 )
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(data_dir)
+        return self._scan(m, [data_dir])
 
     def batch_rows(self, stage: str, batch_id: str) -> int:
         """Row count of ``batch_id``'s append to ``stage``, from its
         parquet footers (no Spark job)."""
-        return sum(r["count"] for r in self._batch_files(stage, batch_id)[1])
+        return sum(r["count"] for r in self._batch_files(stage, batch_id)[2])
 
-    def _batch_files(self, stage: str, batch_id: str) -> tuple[str, list[dict]]:
+    def _batch_files(self, stage: str, batch_id: str) -> tuple[dict, str, list[dict]]:
         m = self.read_manifest(stage)
         token = batch_token(batch_id)
         if m is None or token not in m.get("batch_tokens", []):
             raise FileNotFoundError(f"batch {batch_id!r} not in stage {stage!r}")
         data_dir = os.path.join(self._stage_dir(stage), f"data-{token}")
-        return data_dir, _parquet_file_rows(data_dir) if os.path.isdir(data_dir) else []
+        return m, data_dir, _parquet_file_rows(data_dir) if os.path.isdir(data_dir) else []
 
     def invalidate_from(self, stages: list[str], first_dirty: str) -> None:
         """Drop manifests of ``first_dirty`` and all later stages."""
@@ -523,7 +555,10 @@ def _data_dirs(m: dict) -> list[str]:
     return [m["data_dir"]] if m.get("data_dir") else []
 
 
-def _parquet_file_rows(data_dir: str) -> list[dict]:
+def _parquet_file_rows(data_dir: str, range_col: str | None = None) -> list[dict]:
+    """Per-file row counts from parquet footers (no Spark job); with
+    ``range_col``, also that column's ``min``/``max`` over the file's
+    row-group statistics (None for an empty file)."""
     import pyarrow.parquet as pq
 
     out = []
@@ -532,8 +567,30 @@ def _parquet_file_rows(data_dir: str) -> list[dict]:
             if name.endswith(".parquet"):
                 p = os.path.join(root, name)
                 md = pq.ParquetFile(p).metadata
-                out.append({"file": os.path.relpath(p, data_dir), "count": md.num_rows})
+                r = {"file": os.path.relpath(p, data_dir), "count": md.num_rows}
+                if range_col:
+                    stats = [
+                        rg.column(j).statistics
+                        for rg in map(md.row_group, range(md.num_row_groups))
+                        for j in range(rg.num_columns)
+                        if rg.column(j).path_in_schema == range_col
+                    ]
+                    r["min"] = min((s.min for s in stats), default=None)
+                    r["max"] = max((s.max for s in stats), default=None)
+                out.append(r)
     return out
+
+
+def _meets(sorted_values: list[int], lo: int, hi: int) -> bool:
+    """True iff some value of ``sorted_values`` lies in ``[lo, hi]``."""
+    i = bisect.bisect_left(sorted_values, lo)
+    return i < len(sorted_values) and sorted_values[i] <= hi
+
+
+def _schema(m: dict):
+    from pyspark.sql import types as T
+
+    return T.StructType.fromJson(json.loads(m["schema"]))
 
 
 def _sem_json() -> dict:

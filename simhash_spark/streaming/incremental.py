@@ -36,26 +36,29 @@ from simhash_spark.util import local_ckpt, unpersist_ckpts
 class IncrementalDedup:
     """Micro-batch incremental near-dup matcher.
 
-    State tables (in a CheckpointStore, all append-only; the three
-    accumulated tables are BUCKETED at the store layer — dir-encoded
-    ``bkt=pmod(hash(key), n_buckets)`` inside every batch's data dir, the
-    Iceberg bucket-partitioning analog):
-      band_index  (clip_id, bkey)                    bkt(bkey)
-      profile     (clip_id, norm_text, simhash)      bkt(clip_id)
-      seen_ids    (clip_id)                          bkt(clip_id)
+    State tables (in a CheckpointStore, all append-only; the two
+    accumulated tables are BUCKETED at the store layer, the Iceberg
+    bucket-partitioning analog: each batch adds a few parquet files
+    sorted by ``bkt``, and the manifest records every file's bucket
+    range — see sources/tableio.py):
       matches     (a, b, det, method, hamming, jaccard) — per-batch output
+      band_index  (clip_id, bkey)                    bkt = pmod(bkey, n)
+      profile     (clip_id, norm_text, simhash)      bkt = pmod(xxhash64(clip_id), n)
+    ``profile`` doubles as the watermark: a clip is seen iff its
+    profile row is committed, and a batch is committed iff its token is
+    in ``profile``'s manifest.
 
     Read-side pruning (VERDICT r2 #3): a micro-batch's joins only touch
-    the buckets its own keys hash into, so each state read lists exactly
-    those ``bkt=`` subdirs instead of scanning the whole accumulated
-    table — per-batch read IO is O(touched buckets), not O(corpus life).
-    Pruning is lossless because every join here is an equi-join on the
-    bucketed key (bkey for the candidate join, clip_id for the
-    watermark anti-join and the verify side table): a matching row can
-    only live in its key's bucket. ``n_buckets`` is pinned in each
-    stage's manifest on first append; mixed layouts are refused.
-    Write-side, each append is clustered by bucket, so a batch adds at
-    most one file per touched bucket per table (<= ``n_buckets``).
+    the buckets its own keys hash into, so each state read opens only the
+    files whose recorded bucket range meets those buckets, then filters
+    ``bkt IN (touched)`` — per-batch read IO is O(touched buckets), not
+    O(corpus life), and no directory is listed. Pruning is lossless
+    because every join here is an equi-join on the bucketed key (bkey
+    for the candidate join, clip_id for the watermark anti-join and the
+    verify side table): a matching row can only live in its key's
+    bucket. ``n_buckets`` is pinned in each stage's manifest on first
+    append; mixed layouts are refused, and so is a state written before
+    the manifest pinned ``layout`` 2 (start a fresh state dir for it).
 
     Per-batch fixed cost: the deduped candidate pairs are truncated by an
     eager local checkpoint, so verify plans over one leaf rather than the
@@ -69,19 +72,26 @@ class IncrementalDedup:
     rule as the batch pipeline's verified_pairs stage.
 
     Crash safety: the batch token is deterministic (caller-supplied, or a
-    hash of the fresh clip_ids), every state append is idempotent on that
-    token, the batch's OUTPUT (matches) is appended durably BEFORE the
-    watermark, and the watermark (seen_ids) is appended LAST. A crash
-    anywhere leaves a retry that re-appends nothing new; a retry whose
-    token is already watermarked re-reads the durably stored matches
-    instead of recomputing — recomputing would see an empty fresh set and
-    silently replace the batch's real duplicates with an empty result
-    (the exactly-once hole ADVICE r2 found in the foreachBatch wiring).
+    hash of the fresh clip_ids), and every state append is idempotent on
+    that token. The appends run in a fixed order: ``matches`` (the
+    batch's output), then ``band_index``, then ``profile`` (the watermark)
+    LAST. A crash anywhere leaves a retry that re-appends nothing already
+    committed and returns the stored matches: a retry after ``matches``
+    committed recomputes, but its ``matches`` append is a no-op (a retry
+    after ``band_index`` also joins the batch's bands against its own
+    committed rows; ``dedupe_pairs`` and the no-op append absorb that).
+    A retry whose token is already in ``profile`` re-reads the stored
+    matches instead of recomputing — recomputing would see an empty fresh
+    set and silently replace the batch's real duplicates with an empty
+    result (the exactly-once hole ADVICE r2 found in the foreachBatch
+    wiring). The hot-group metric is logged only by the call whose
+    ``matches`` append wrote the batch, so a retry never logs it twice.
     """
 
     MATCHES_SCHEMA = (
         "a string, b string, det string, method string, hamming int, jaccard double"
     )
+    PROFILE_SCHEMA = "clip_id string, norm_text string, simhash long"
 
     def __init__(
         self,
@@ -112,17 +122,17 @@ class IncrementalDedup:
     def _state_pruned(self, name: str, schema: str, buckets: list[int]) -> DataFrame:
         if not self.store.is_committed(name):
             return self.spark.createDataFrame([], schema)
-        return self.store.read_pruned(name, values=buckets, schema=schema)
+        return self.store.read_pruned(name, values=buckets)
 
     def ingest(self, clips: DataFrame, batch_id: str | None = None) -> DataFrame:
-        if batch_id is not None and self.store.has_batch("seen_ids", batch_id):
+        if batch_id is not None and self.store.has_batch("profile", batch_id):
             # Fully-committed replay (e.g. the stream's output write failed
             # AFTER ingest returned): every clip is already watermarked, so
             # a recompute would produce an empty fresh set — return the
             # batch's durably stored matches instead.
             return self.store.read_batch("matches", batch_id, self.MATCHES_SCHEMA)
         id_bkts = self._touched(clips, self._id_bkt("clip_id"))
-        seen = self._state_pruned("seen_ids", "clip_id string", id_bkts)
+        seen = self._state_pruned("profile", self.PROFILE_SCHEMA, id_bkts).select("clip_id")
 
         fresh = clips.join(seen, "clip_id", "left_anti")
         prof_new = (
@@ -132,7 +142,7 @@ class IncrementalDedup:
         )
         new_bands = (
             # legacy string ids: the incremental state tables
-            # (band_index/seen_ids/profile) are clip_id-keyed, and
+            # (band_index/profile) are clip_id-keyed, and
             # verify_pairs dispatches to its string path on these pairs.
             build_bands(
                 prof_new, prof_new, detectors=self.cfg.detectors, id_col="clip_id"
@@ -240,39 +250,41 @@ class IncrementalDedup:
             pairs.select(F.col("b").alias("pid"))
         )
         pid_bkts = self._touched(pair_ids, self._id_bkt("pid"))
-        prof_old = self._state_pruned(
-            "profile", "clip_id string, norm_text string, simhash long", pid_bkts
-        )
+        prof_old = self._state_pruned("profile", self.PROFILE_SCHEMA, pid_bkts)
         profile_all = prof_old.unionByName(prof_new)
         verified = verify_pairs(pairs, profile_all)
 
-        # --- commit state: idempotent appends, output BEFORE watermark,
-        # watermark LAST. Ordering invariant: once seen_ids holds this
-        # token, `matches` provably holds the batch's output, so the
-        # replay fast-path above can always serve it back. The append
-        # itself materializes `verified` (one pass) and releases the
-        # verify tier's internal persists.
+        # --- commit state: idempotent appends in the order of the class
+        # docstring — output first, watermark (profile) LAST. Once
+        # profile holds this token, `matches` provably holds the batch's
+        # output, so the replay fast-path above can always serve it back.
+        # The append itself materializes `verified` (one pass) and
+        # releases the verify tier's internal persists.
+        writes_matches = not self.store.has_batch("matches", batch_id)
         self.store.append("matches", verified, batch_id=batch_id)
-        # hot-group accounting IMMEDIATELY after the matches commit
-        # (ADVICE r5: appended last, a crash between the state appends
-        # lost the 'never silent' log line for a batch whose matches
-        # were already durable). `rows` counts this batch's MEMBERSHIP
-        # of over-cap groups (new rows landing in hot groups, the
-        # group's hub row included) — the group-size view of the
-        # diversion, not an edge count.
-        hot_stats = sizes.filter(F.col("grp_n") > self.cfg.band_group_cap).agg(
-            F.count("*").alias("groups"),
-            F.coalesce(F.sum("new_n"), F.lit(0)).alias("rows"),
-        ).first()
-        if int(hot_stats["groups"]):
-            self.store.append_metric(
-                "incremental_hot_band_rows_starred",
-                int(hot_stats["rows"]),
-                batch_id=batch_id,
-                groups=int(hot_stats["groups"]),
-                cap=self.cfg.band_group_cap,
-            )
         unpersist_ckpts([pairs_h])
+        if writes_matches:
+            # hot-group accounting IMMEDIATELY after the matches commit
+            # (ADVICE r5: appended last, a crash between the state appends
+            # lost the 'never silent' log line for a batch whose matches
+            # were already durable), and only by the call that wrote them:
+            # a retry would log the batch twice, with its own committed
+            # band_index rows counted in grp_n. `rows` counts this batch's
+            # MEMBERSHIP of over-cap groups (new rows landing in hot
+            # groups, the group's hub row included) — the group-size view
+            # of the diversion, not an edge count.
+            hot_stats = sizes.filter(F.col("grp_n") > cap).agg(
+                F.count("*").alias("groups"),
+                F.coalesce(F.sum("new_n"), F.lit(0)).alias("rows"),
+            ).first()
+            if int(hot_stats["groups"]):
+                self.store.append_metric(
+                    "incremental_hot_band_rows_starred",
+                    int(hot_stats["rows"]),
+                    batch_id=batch_id,
+                    groups=int(hot_stats["groups"]),
+                    cap=cap,
+                )
         self.store.append(
             "band_index",
             new_bands,
@@ -283,13 +295,6 @@ class IncrementalDedup:
         self.store.append(
             "profile",
             prof_new.withColumn("bkt", self._id_bkt("clip_id")),
-            batch_id=batch_id,
-            partition_by="bkt",
-            n_buckets=self.n_buckets,
-        )
-        self.store.append(
-            "seen_ids",
-            prof_new.select("clip_id").withColumn("bkt", self._id_bkt("clip_id")),
             batch_id=batch_id,
             partition_by="bkt",
             n_buckets=self.n_buckets,

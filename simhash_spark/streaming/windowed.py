@@ -123,10 +123,11 @@ def run_incremental_dedup_stream(
 
     Exactly-once wiring: Spark's micro-batch id becomes the store's
     idempotent append token; ingest() durably appends the batch's matches
-    BEFORE the seen_ids watermark, so a replay after ANY failure point —
-    including a crash between ingest() returning and this overwrite
-    committing — re-reads the stored matches rather than recomputing an
-    empty set against an already-advanced watermark (ADVICE r2, medium).
+    BEFORE its profile rows (the watermark), so a replay after ANY
+    failure point — including a crash between ingest() returning and
+    this overwrite committing — re-reads the stored matches rather than
+    recomputing an empty set against an already-advanced watermark
+    (ADVICE r2, medium).
     Each batch's matches land with OVERWRITE in
     ``<state>/matches_out/batch-<id>``: replays rewrite identical data."""
     from simhash_spark.streaming.incremental import IncrementalDedup

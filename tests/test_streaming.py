@@ -124,8 +124,9 @@ def test_replayed_batch_returns_stored_matches_not_empty(spark, tmp_path):
     # replay the SAME micro-batch (sink write "failed" after commit)
     replay = {(r.a, r.b) for r in inc.ingest(b1, batch_id="stream-batch-1").collect()}
     assert replay == first
-    # and state was not double-appended by the replay
-    m = inc.store.read_manifest("seen_ids")
+    # and state was not double-appended by the replay (profile is the
+    # watermark table)
+    m = inc.store.read_manifest("profile")
     assert len(m["batch_tokens"]) == 2
 
 
@@ -163,11 +164,21 @@ def test_long_batch_id_idempotency(spark, tmp_path):
 
 def test_incremental_reads_prune_to_touched_buckets(spark, tmp_path):
     """Read-side state pruning (VERDICT r2 #3): at steady state a small
-    micro-batch's band_index/profile/seen_ids reads list a STRICT subset
-    of the stage's data paths, and matches are identical to a run whose
-    bucket count degenerates pruning to a full scan."""
-    from pyspark.sql import functions as F
+    micro-batch's band_index/profile reads open a STRICT subset of the
+    stage's data files and return only rows of the touched buckets, and
+    matches are identical to a run whose bucket count degenerates
+    pruning to a full scan. Files are capped at 32 rows here so that
+    every batch spans several files, each covering a few buckets."""
+    conf = "spark.sql.files.maxRecordsPerFile"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, "32")
+    try:
+        _check_pruned_reads(spark, tmp_path)
+    finally:
+        spark.conf.set(conf, saved)
 
+
+def _check_pruned_reads(spark, tmp_path):
     long = " ".join(f"word{i}" for i in range(40))
     rows = [(f"c{i}", f"unique text number {i} " + " ".join(f"w{i}_{j}" for j in range(12)))
             for i in range(24)]
@@ -182,20 +193,25 @@ def test_incremental_reads_prune_to_touched_buckets(spark, tmp_path):
     got_f = {(r.a, r.b) for r in flat.ingest(_clips(spark, dup_batch)).collect()}
     assert got_p == got_f == {("base", "dup1")}
 
-    # the paths a single-clip batch's band join would read: strict subset
+    # the files a single-clip batch's band join would read: strict subset
     all_paths = set(inc.store.pruned_paths("band_index"))
+    assert len(all_paths) > len(inc.store.read_manifest("band_index")["batch_tokens"])
     one = _clips(spark, [("probe", "probe text alpha beta gamma")])
     from simhash_spark.operators.lsh import build_bands
     from simhash_spark.functions.signatures import normalize_udf, simhash64_udf
     prof = one.select("clip_id", normalize_udf("transcript").alias("norm_text")).withColumn(
         "simhash", simhash64_udf("norm_text")
     )
-    bands = build_bands(prof, prof, detectors=inc.cfg.detectors).withColumn(
-        "bkt", F.pmod(F.col("bkey"), F.lit(inc.n_buckets)).cast("int")
-    )
+    bkt = lambda c: F.pmod(F.col(c), F.lit(inc.n_buckets)).cast("int")  # noqa: E731
+    bands = build_bands(prof, prof, detectors=inc.cfg.detectors).withColumn("bkt", bkt("bkey"))
     touched = [r[0] for r in bands.select("bkt").distinct().collect()]
     pruned = set(inc.store.pruned_paths("band_index", touched))
     assert pruned < all_paths  # strict subset: pruning is real
+    # row level: exactly the touched buckets' rows of the whole table
+    got = sorted(map(tuple, inc.store.read_pruned("band_index", touched).collect()))
+    everything = inc.store.read("band_index")
+    want = sorted(map(tuple, everything.filter(bkt("bkey").isin(touched)).collect()))
+    assert got == want and 0 < len(got) < everything.count()
     # adopted layout: a reopened instance inherits the pinned bucket count
     re = IncrementalDedup(spark, str(tmp_path / "pruned"), n_buckets=999)
     assert re.n_buckets == 64
@@ -274,3 +290,81 @@ def test_ingest_releases_storage_and_counts_matches_exactly(spark, tmp_path):
         m["batch_id"]: m["value"] for m in metrics if m["metric"] == "incremental_ingest_matches"
     }
     assert counted == got
+
+
+def test_ingest_killed_between_appends_retries_to_same_matches(spark, tmp_path):
+    """Crash order: a kill after the ``matches`` append, and one after the
+    ``band_index`` append, each leave a state whose same-token retry
+    returns the uninterrupted run's matches. Afterwards every state table
+    holds the batch token exactly once, and the hot-group diversion is
+    logged once, as in the uninterrupted run (the retry's ``matches``
+    append is a no-op, so it logs nothing; after the ``band_index``
+    kill its group sizes would also count the batch's own rows)."""
+    import json
+    import os
+
+    import pytest
+
+    from simhash_spark.config import EngineConfig
+
+    cfg = EngineConfig(band_group_cap=5)
+    long = " ".join(f"word{i}" for i in range(40))
+    boiler = " ".join(f"boiler{i}" for i in range(30))
+    batch = _clips(
+        spark,
+        [("a", long), ("c", long.replace("word20", "wordXX"))]
+        + [(f"h{i}", boiler) for i in range(8)],
+    )
+
+    def hot_records(inc):
+        path = os.path.join(inc.store.base, "_metrics.jsonl")
+        return sorted(
+            (m["batch_id"], m["value"], m["groups"])
+            for m in map(json.loads, open(path))
+            if m["metric"] == "incremental_hot_band_rows_starred"
+        )
+
+    ref = IncrementalDedup(spark, str(tmp_path / "ref"), cfg)
+    want = sorted(tuple(r) for r in ref.ingest(batch, batch_id="k").collect())
+    assert ("a", "c") in {r[:2] for r in want}
+    assert [r[0] for r in hot_records(ref)] == ["k"]  # 8 clones > cap 5
+
+    for killed_at in ("band_index", "profile"):
+        inc = IncrementalDedup(spark, str(tmp_path / killed_at), cfg)
+        real_append = inc.store.append
+
+        def append(stage, df, *args, **kwargs):
+            if stage == killed_at:
+                raise RuntimeError(f"killed before the {stage} append")
+            return real_append(stage, df, *args, **kwargs)
+
+        inc.store.append = append
+        with pytest.raises(RuntimeError, match="killed"):
+            inc.ingest(batch, batch_id="k")
+        del inc.store.append
+        assert inc.store.has_batch("matches", "k") and not inc.store.has_batch("profile", "k")
+        got = sorted(tuple(r) for r in inc.ingest(batch, batch_id="k").collect())
+        assert got == want, killed_at
+        for table in ("matches", "band_index", "profile"):
+            assert inc.store.read_manifest(table)["batch_tokens"] == ["k"], table
+        assert hot_records(inc) == hot_records(ref), killed_at
+
+
+def test_state_without_layout_pin_is_refused(spark, tmp_path):
+    """A bucketed state whose manifest pins no ``layout`` 2 (written by an
+    earlier version, as ``bkt=`` dirs) is refused at open, with a message
+    that says to start a fresh state dir and names no setting."""
+    import json
+
+    import pytest
+
+    inc = IncrementalDedup(spark, str(tmp_path))
+    inc.ingest(_clips(spark, [("a", "some text to index here")]), batch_id="b0")
+    path = inc.store._manifest_path("band_index")
+    m = json.load(open(path))
+    assert m["layout"] == 2
+    del m["layout"]
+    json.dump(m, open(path, "w"))
+    with pytest.raises(RuntimeError, match="fresh state dir") as err:
+        IncrementalDedup(spark, str(tmp_path))
+    assert "SPARK_GRAFT" not in str(err.value) and "=" not in str(err.value)

@@ -63,10 +63,13 @@ def test_metrics_and_lineage_append(store):
 
 
 def test_bucketed_append_writes_one_file_per_bucket(store, spark):
-    """A bucketed append clusters rows by bucket before the write: a frame
-    spread over many input partitions still lands as ONE parquet file per
-    ``bkt=`` dir (not one per input task and bucket); pruned reads return
-    exactly the rows of the asked buckets; a retry writes nothing."""
+    """A bucketed append range-clusters and sorts rows by bucket before a
+    plain parquet write: a frame spread over many input partitions lands
+    as a few files (not one per input task and bucket, and no ``bkt=``
+    dirs), each sorted by ``bkt``, whose disjoint ``[min, max]`` bucket
+    ranges the manifest records; pruned reads return exactly the rows of
+    the asked buckets; a retry writes nothing."""
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     n_buckets = 8
@@ -78,12 +81,18 @@ def test_bucketed_append_writes_one_file_per_bucket(store, spark):
     assert df.rdd.getNumPartitions() >= 8
     m = store.append("t", df, batch_id="b1", partition_by="bkt", n_buckets=n_buckets)
     data_dir = m["data_dirs"][-1]
-    bkt_dirs = sorted(d for d in os.listdir(data_dir) if d.startswith("bkt="))
-    assert len(bkt_dirs) == n_buckets
-    for d in bkt_dirs:
-        parts = [f for f in os.listdir(os.path.join(data_dir, d)) if f.endswith(".parquet")]
-        assert len(parts) == 1, (d, parts)
-    assert m["n_files"] == n_buckets and m["rows"] == 400
+    assert not [d for d in os.listdir(data_dir) if d.startswith("bkt=")]
+    parts = sorted(f for f in os.listdir(data_dir) if f.endswith(".parquet"))
+    assert 1 <= len(parts) < n_buckets
+    assert m["layout"] == 2 and m["n_files"] == len(parts) and m["rows"] == 400
+    files = m["files"]
+    assert sum(f["rows"] for f in files) == 400
+    ranges = sorted((f["min"], f["max"]) for f in files)
+    assert ranges[0][0] == 0 and ranges[-1][1] == n_buckets - 1
+    assert all(hi < lo for (_, hi), (lo, _) in zip(ranges, ranges[1:]))  # disjoint
+    for f in files:
+        bkts = pq.read_table(os.path.join(store.base, "t", f["file"]))["bkt"].to_pylist()
+        assert bkts == sorted(bkts) and (bkts[0], bkts[-1]) == (f["min"], f["max"])
 
     got = sorted(r.x for r in store.read_pruned("t", values=[1, 6]).collect())
     assert got == [x for x in range(400) if x % n_buckets in (1, 6)]
